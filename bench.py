@@ -1,6 +1,7 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
+sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints four compact JSON lines (see
+``render_report``); the last is the totals line:
+{"metric":"headline_queries_total","value":<total sec>,"value_full":...,"unit":"sec","sf":...}
 
 Each query is forced end-to-end with the noop sink (full compute, no driver
 materialization cost). The sync benchmark exercises the engine's scale write
@@ -136,6 +137,44 @@ def _warm_min(fn) -> float:
     return round(min(warm), 3)
 
 
+def render_report(
+    timings: dict[str, float],
+    cold_timings: dict[str, float],
+    extra_timings: dict[str, float],
+    total: float,
+    value_full: float,
+    sf: float | None,
+) -> list[str]:
+    """The bench's output lines, in print order.
+
+    The bench harness keeps only the last 2000 characters of the output,
+    so the lines are ordered by how much of the tail they must survive in:
+    the full record first, then the extra tier's per-query line, then the
+    headline per-query line, and the short totals line last. All are
+    compact JSON; with the headline line and the totals line well under
+    2000 characters together, a tail cut can only ever split the extras.
+    """
+    def line(record: dict) -> str:
+        return json.dumps(record, separators=(",", ":"))
+
+    totals = {
+        "metric": "headline_queries_total",
+        "value": total,
+        "value_full": value_full,
+        "unit": "sec",
+        "sf": sf,
+    }
+    return [
+        line({**totals, "queries": timings, "queries_cold": cold_timings,
+              "queries_extra": extra_timings}),
+        line({"metric": "extra_queries_per_query", "unit": "sec",
+              "queries_extra": extra_timings, "sf": sf}),
+        line({"metric": "headline_queries_per_query", "unit": "sec",
+              "queries": timings, "sf": sf}),
+        line(totals),
+    ]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -204,51 +243,10 @@ def main() -> None:
     # lists BASELINE.md records next to each number).
     value_full = round(total + sum(extra_timings.values()), 3)
 
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "value_full": value_full,
-                "unit": "sec",
-                "queries": timings,
-                "queries_cold": cold_timings,
-                "queries_extra": extra_timings,
-                "sf": sf,
-            }
-        )
-    )
-    # compact PER-QUERY line (round-11 verdict #2): the full JSON above
-    # outgrew the driver's tail capture, so PERF_r11 lost per-entry
-    # round-over-round comparison (per_query empty, n_common 0). This line
-    # carries only the warm per-entry floats (~2 KB) so the per-query dicts
-    # survive tail truncation as a well-formed JSON line of their own.
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_per_query",
-                "unit": "sec",
-                "queries": timings,
-                "queries_extra": extra_timings,
-                "sf": sf,
-            }
-        )
-    )
-    # compact summary LAST: the driver's BENCH capture keeps only the tail
-    # of the output, and the full JSON above outgrew it (BENCH_r05-r08 all
-    # recorded parsed:null) — a short final line guarantees the headline
-    # numbers survive any tail truncation.
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "value_full": value_full,
-                "unit": "sec",
-                "sf": sf,
-            }
-        )
-    )
+    for line in render_report(
+        timings, cold_timings, extra_timings, total, value_full, sf
+    ):
+        print(line)
 
 
 if __name__ == "__main__":

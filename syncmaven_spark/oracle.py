@@ -132,20 +132,3 @@ def _close(a, b, tol: float) -> bool:
         return math.isclose(a, b, rel_tol=tol, abs_tol=tol)
     return a == b
 
-
-def run_all(spark, sf_dir: str, names: list[str] | None = None) -> list[ParityResult]:
-    from syncmaven_spark.queries import CATALOG
-
-    con = duckdb_connection(sf_dir)
-    results = []
-    for name, qd in CATALOG.items():
-        if names and name not in names:
-            continue
-        if not qd.oracle:
-            continue
-        try:
-            df = qd.spark_fn(spark, sf_dir)
-            results.append(compare(name, df, con, qd.oracle))
-        except Exception as e:  # noqa: BLE001 - harness reports, not raises
-            results.append(ParityResult(name, False, -1, -1, f"EXCEPTION: {e}"))
-    return results

@@ -22,7 +22,7 @@ from typing import Any, Iterator
 
 import jsonschema
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -174,12 +174,3 @@ def split_valid_invalid(
     invalid = tagged.filter(~F.col("_valid")).drop("_valid")
     return valid, invalid
 
-
-def struct_validity_predicate(required: list[str]) -> Column:
-    """Cheap JVM-only predicate for the common case: required columns present
-    (non-null). Used when the declared schema has no constraints beyond
-    required fields — keeps validation inside whole-stage codegen."""
-    pred = F.lit(True)
-    for name in required:
-        pred = pred & F.col(name).isNotNull()
-    return pred

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from syncmaven_spark.operators import cosine_pairs_exact, cosine_pairs_lsh
 
@@ -122,3 +123,49 @@ def test_cosine_index_recipe_stamp_and_new_id_guard(planted, tmp_path):
         cosine_lsh_candidates_incremental(
             overlapping, stored, n_planes=4, n_tables=8, assert_new_ids=True
         )
+
+
+def test_cosine_incremental_new_index_skips_batch_scan(spark):
+    """With new_index supplied, the probe derived dim by
+    eagerly scanning new_df — one Spark job per call, re-executing the
+    micro-batch source once per epoch in the streaming driver. dim now
+    comes from the recipe stamps; a poisoned new_df (raising UDF) proves
+    the batch is never scanned, and recipe mismatches still fail fast."""
+    from syncmaven_spark.operators import (
+        cosine_lsh_candidates_incremental,
+        cosine_lsh_index,
+    )
+
+    rng = np.random.RandomState(7)
+    rows = [(i, rng.standard_normal(16).tolist()) for i in range(40)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    old = emb.filter("vec_id < 30")
+    new = emb.filter("vec_id >= 30")
+    cfg = dict(n_planes=4, n_tables=8, max_bucket_size=None)
+    index = cosine_lsh_index(old, **cfg)
+    batch_index = cosine_lsh_index(new, **cfg)
+
+    @F.udf("array<double>")
+    def boom(v):
+        raise RuntimeError("batch scanned")
+
+    poisoned = new.withColumn("embedding", boom("embedding"))
+    got = cosine_lsh_candidates_incremental(
+        poisoned, index, new_index=batch_index, **cfg
+    )
+    assert got.count() >= 0  # evaluating candidates never touches new_df
+
+    # the stamp-only path still fails fast on a wrong probe recipe
+    with pytest.raises(ValueError, match="recipe mismatch"):
+        cosine_lsh_candidates_incremental(
+            poisoned, index, n_planes=8, n_tables=8,
+            max_bucket_size=None, new_index=batch_index,
+        )
+    # and matches the clean-batch result exactly
+    clean = {
+        (r.id_a, r.id_b)
+        for r in cosine_lsh_candidates_incremental(
+            new, index, **cfg
+        ).collect()
+    }
+    assert {(r.id_a, r.id_b) for r in got.collect()} == clean

@@ -624,3 +624,22 @@ def test_containment_incremental_equals_one_shot(spark, tmp_path):
         containment_decontamination_pairs_incremental(
             train, stored, "text", "doc_id", threshold=0.5, shingle_k=8
         )
+
+
+def test_check_index_recipe_compares_floats(spark):
+    """_norm coerced every numeric with int(), so two
+    genuinely different float recipe values (0.8 vs 0.3) compared equal
+    (int both → 0), silently disabling the fail-fast. Non-integral floats
+    now compare as floats; integral widening (32 vs 32.0, the parquet
+    JSON round-trip case) stays tolerated."""
+    from syncmaven_spark.operators.dedup import (
+        _with_recipe_meta,
+        check_index_recipe,
+    )
+
+    df = spark.createDataFrame([(1, 2)], "id long, h long")
+    stamped = _with_recipe_meta(df, "h", {"threshold": 0.8, "bands": 32})
+    check_index_recipe(stamped, "h", {"threshold": 0.8, "bands": 32})
+    check_index_recipe(stamped, "h", {"threshold": 0.8, "bands": 32.0})
+    with pytest.raises(ValueError, match="recipe mismatch"):
+        check_index_recipe(stamped, "h", {"threshold": 0.3, "bands": 32})

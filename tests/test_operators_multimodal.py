@@ -2,6 +2,10 @@
 (the synthetic media table emits actual images/audio since round 5);
 formats without a stdlib codec exercise the deterministic fake path."""
 
+import binascii
+import struct
+import zlib
+
 import pytest
 
 from syncmaven_spark.operators.multimodal import (
@@ -10,6 +14,12 @@ from syncmaven_spark.operators.multimodal import (
     sample_video_frames,
     synthetic_media_df,
 )
+
+
+def _png_chunk(ctype, data):
+    body = ctype + data
+    return struct.pack(">I", len(data)) + body + struct.pack(
+        ">I", binascii.crc32(body) & 0xFFFFFFFF)
 
 
 @pytest.fixture(scope="module")
@@ -199,12 +209,7 @@ def test_png_codec_roundtrip_and_filters():
     """decode_png is a real stdlib parser: round-trip via encode_png, plus
     a hand-filtered image exercising every PNG filter type (Sub/Up/
     Average/Paeth) against the spec's recurrences."""
-    import binascii
-    import struct
-    import zlib
-
     import numpy as np
-    import pytest
 
     from syncmaven_spark.operators.multimodal import decode_png, encode_png
 
@@ -238,33 +243,28 @@ def test_png_codec_roundtrip_and_filters():
                 pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
             raw.append((int(recon[y][x]) - int(pred)) & 0xFF)
 
-    def chunk(ctype, data):
-        body = ctype + data
-        return struct.pack(">I", len(data)) + body + struct.pack(
-            ">I", binascii.crc32(body) & 0xFFFFFFFF)
-
     blob = (b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b""))
+            + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
+            + _png_chunk(b"IDAT", zlib.compress(bytes(raw)))
+            + _png_chunk(b"IEND", b""))
     assert (decode_png(blob) == px).all()
 
     # RGBA: alpha dropped, RGB planes pixel-true
     rgba = rng.randint(0, 256, size=(4, 3, 4), dtype=np.uint8)
     raw4 = b"".join(b"\x00" + rgba[y].tobytes() for y in range(4))
     blob4 = (b"\x89PNG\r\n\x1a\n"
-             + chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 4, 8, 6, 0, 0, 0))
-             + chunk(b"IDAT", zlib.compress(raw4))
-             + chunk(b"IEND", b""))
+             + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 4, 8, 6, 0, 0, 0))
+             + _png_chunk(b"IDAT", zlib.compress(raw4))
+             + _png_chunk(b"IEND", b""))
     assert (decode_png(blob4) == rgba[:, :, :3]).all()
 
     # grayscale replicates to 3 channels
     gray = rng.randint(0, 256, size=(3, 5, 1), dtype=np.uint8)
     rawg = b"".join(b"\x00" + gray[y].tobytes() for y in range(3))
     blobg = (b"\x89PNG\r\n\x1a\n"
-             + chunk(b"IHDR", struct.pack(">IIBBBBB", 5, 3, 8, 0, 0, 0, 0))
-             + chunk(b"IDAT", zlib.compress(rawg))
-             + chunk(b"IEND", b""))
+             + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 5, 3, 8, 0, 0, 0, 0))
+             + _png_chunk(b"IDAT", zlib.compress(rawg))
+             + _png_chunk(b"IEND", b""))
     assert (decode_png(blobg) == np.repeat(gray, 3, axis=2)).all()
 
     with pytest.raises(ValueError):
@@ -272,9 +272,9 @@ def test_png_codec_roundtrip_and_filters():
     with pytest.raises(ValueError):
         # 16-bit depth rejected
         decode_png(b"\x89PNG\r\n\x1a\n"
-                   + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 16, 2, 0, 0, 0))
-                   + chunk(b"IDAT", zlib.compress(b"\x00" * 26))
-                   + chunk(b"IEND", b""))
+                   + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 16, 2, 0, 0, 0))
+                   + _png_chunk(b"IDAT", zlib.compress(b"\x00" * 26))
+                   + _png_chunk(b"IEND", b""))
 
 
 def test_extract_features_png_pixel_true(spark):
@@ -358,3 +358,46 @@ def test_image_codec_roundtrip_property():
         assert (decode_bmp(encode_bmp(px)) == px).all()
 
     check()
+
+
+def test_png_malformed_ihdr_raises_value_error_and_resize_falls_back(spark):
+    """A wrong-length IHDR raised struct.error, escaping
+    the resizer's malformed-blob catch and killing the whole task."""
+    from syncmaven_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        decode_png,
+        resize_images,
+    )
+
+    bad = (b"\x89PNG\r\n\x1a\n"
+           + _png_chunk(b"IHDR", b"\x00" * 10)  # 10-byte IHDR payload, not 13
+           + _png_chunk(b"IDAT", b"x")
+           + _png_chunk(b"IEND", b""))
+    with pytest.raises(ValueError, match="IHDR"):
+        decode_png(bad)
+    # one bad blob must not abort a corpus-wide resize pass
+    df = spark.createDataFrame(
+        [(0, bad, {"media_type": "image", "format": "png", "width": 1,
+                   "height": 1, "duration_ms": None})], MEDIA_SCHEMA)
+    out = resize_images(df, width=2, height=2).collect()[0]
+    assert bytes(out.content).startswith(b"RESIZED:2x2:")
+
+
+def test_png_inflate_bounded_to_declared_size():
+    """The IDAT inflate is capped at the declared pixel
+    size, so a decompression bomb cannot allocate past it (trailing
+    inflated bytes beyond the declared size are ignored, as before)."""
+    import numpy as np
+
+    from syncmaven_spark.operators.multimodal import decode_png
+
+    px = np.arange(2 * 2 * 3, dtype=np.uint8).reshape(2, 2, 3)
+    raw = b"".join(b"\x00" + px[y].tobytes() for y in range(2))
+    # append 64 MB of zeros INSIDE the compressed stream: decode must
+    # still succeed, reading only the declared 2x2 image
+    blob = (b"\x89PNG\r\n\x1a\n"
+            + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0))
+            + _png_chunk(b"IDAT", zlib.compress(raw + b"\x00" * (64 << 20)))
+            + _png_chunk(b"IEND", b""))
+    assert len(blob) < 200_000  # the bomb compresses tiny
+    assert (decode_png(blob) == px).all()

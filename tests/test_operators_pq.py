@@ -3,17 +3,36 @@ reference, lossless quantization on code-coverable corpora, recall gate,
 stamp/fail-fast contracts, and the stateless-append property."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import syncmaven_spark.operators.pq as pq_mod
 from syncmaven_spark.operators import (
     cosine_topk_bruteforce,
+    ivfpq_index,
+    ivfpq_probe,
     load_pq_codebooks,
+    pq_drift,
+    pq_drift_assigned,
     pq_encode,
     pq_probe,
     pq_train,
+    rerank_exact_topk,
 )
 from syncmaven_spark.operators.dedup import stamped_recipe
+from syncmaven_spark.operators.pq import (
+    _assign_codes,
+    _driver_kernel_threads,
+    _gemm_scores_exact,
+)
+from syncmaven_spark.operators.similarity import (
+    _load_codebook,
+    ivf_append,
+    ivf_drift,
+    ivf_index,
+)
+from syncmaven_spark.streaming.ann import _epoch_drift_record
 from syncmaven_spark.session import load_tables
 
 from tests.conftest import SF_SMOKE
@@ -796,3 +815,278 @@ def test_encode_assigned_rejects_foreign_assignments(spark):
     # foreign codebook: the assignments' stamp mismatches and fails fast
     with pytest.raises(ValueError, match="recipe mismatch"):
         ivfpq_encode_assigned(assignments_a, cents_b, books)
+
+
+def _pairs(df):
+    return {(r.q_id, r.n_id, r.approx_sim, r.rank) for r in df.collect()}
+
+
+def test_encode_udf_skips_empty_arrow_batch():
+    """An empty Arrow batch made series.tolist() == [] reshape
+    to (0,) and trip the 'expected N-dim vectors' guard, failing the job.
+    The kernel must yield an empty series instead."""
+    books = np.zeros((2, 4, 3))
+    udf = pq_mod._encode_udf(books)
+    out = list(udf.func(iter([pd.Series([], dtype=object)])))
+    assert len(out) == 1 and len(out[0]) == 0
+    # non-empty batches still validate dimensions
+    with pytest.raises(ValueError, match="expected 6-dim"):
+        list(udf.func(iter([pd.Series([[1.0, 2.0]])])))
+
+
+def test_rerank_exact_topk_bounds_broadcasts(spark):
+    """Both broadcast sides (shortlist pairs, query vectors)
+    now carry the limit(n+1)-probe guard with an actionable error."""
+    df = _toy_corpus(spark, n=20, dim=8)
+    shortlist = spark.createDataFrame(
+        [(0, i) for i in range(1, 6)], "q_id long, n_id long"
+    )
+    queries = df.filter("vec_id = 0")
+    # in-bound call unchanged
+    got = rerank_exact_topk(shortlist, queries, df, k=3)
+    assert got.count() == 3
+    with pytest.raises(ValueError, match="shortlist"):
+        rerank_exact_topk(shortlist, queries, df, k=3, max_broadcast_rows=4)
+    big_short = spark.createDataFrame(
+        [(0, 1)], "q_id long, n_id long"
+    )
+    with pytest.raises(ValueError, match="query-vector"):
+        rerank_exact_topk(
+            big_short, df.limit(10), df, k=3, max_broadcast_rows=5
+        )
+
+
+def test_pq_probe_plan_reads_codes_only(spark, tmp_path):
+    """The ADC probe's plan properties, asserted on the plan
+    string itself — the scan reads the codes table (ReadSchema carries
+    ``codes``, never the float vector column) and Python appears only
+    Arrow-batched (no BatchEvalPython)."""
+    df = _toy_corpus(spark, n=40, dim=8)
+    books_df = pq_train(df, m=4, n_codes=8, seed=3)
+    codes_path = str(tmp_path / "codes")
+    pq_encode(df, books_df).write.parquet(codes_path)
+    codes_df = spark.read.parquet(codes_path)
+    probe = pq_probe(
+        df.filter("vec_id < 3"), codes_df, books_df, k=4, exclude_self=True
+    )
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    assert "codes" in plan and "ReadSchema" in plan
+    assert "embedding" not in plan  # the query read happened at call time
+    assert "BatchEvalPython" not in plan
+    assert "MapInPandas" in plan
+
+
+def test_ivfpq_probe_plan_prunes_to_codes_and_cells(spark, tmp_path):
+    df = _toy_corpus(spark, n=60, dim=8, seed=11)
+    cells_codes, centroids_df, codebooks_df = ivfpq_index(
+        df, n_centroids=4, m=4, n_codes=8
+    )
+    store = str(tmp_path / "store")
+    cells_codes.write.partitionBy("cell").parquet(store)
+    stored = spark.read.parquet(store)
+    probe = ivfpq_probe(
+        df.filter("vec_id < 3"), stored, centroids_df, codebooks_df,
+        k=4, n_probe=2, exclude_self=True,
+    )
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    assert "codes" in plan and "ReadSchema" in plan
+    assert "embedding" not in plan
+    assert "BatchEvalPython" not in plan
+    # the probed-cell restriction reaches the scan as a partition filter
+    assert "cell" in plan
+
+
+@pytest.fixture(scope="module")
+def _assigned(spark):
+    rng = np.random.RandomState(5)
+    rows = [
+        (int(i), [float(x) for x in rng.standard_normal(16)])
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    assignments, cents = ivf_index(df, n_centroids=4, sample_size=300)
+    books = pq_train(df, m=8, n_codes=16, sample_size=300)
+    return df, assignments, cents, books
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_epoch_drift_record_equals_two_job_layout(_assigned, residual):
+    df, assignments, cents, books_df = _assigned
+    centroids, ivf_recipe = _load_codebook(cents)
+    books, pq_recipe = load_pq_codebooks(books_df)
+    loaded = (centroids, ivf_recipe, books, pq_recipe)
+    rec = _epoch_drift_record(
+        assignments, (centroids, ivf_recipe), (books, pq_recipe), residual
+    )
+    cell_row = ivf_drift(assignments, cents, _loaded=(centroids, ivf_recipe)).first()
+    recon_row = pq_drift_assigned(
+        assignments, cents, books_df,
+        encode_residuals=residual, _loaded=loaded,
+    ).first()
+    assert rec["n_vectors"] == cell_row["n_vectors"] == recon_row["n_vectors"]
+    for key in ("mean_cell_cos", "p10_cell_cos", "min_cell_cos"):
+        assert rec[key] == cell_row[key]
+    for key in ("mean_recon_cos", "p10_recon_cos", "min_recon_cos"):
+        assert rec[key] == recon_row[key]
+
+
+def test_bounded_artifact_tables_roundtrip_and_are_single_partition(_assigned):
+    _df, _assignments, cents, books_df = _assigned
+    assert cents.rdd.getNumPartitions() == 1
+    assert books_df.rdd.getNumPartitions() == 1
+    centroids, recipe = _load_codebook(cents)
+    assert recipe["n_centroids"] == 4
+    books, pq_recipe = load_pq_codebooks(books_df)
+    assert books.shape == (8, 16, 2)
+    assert pq_recipe["m"] == 8 and pq_recipe["n_codes"] == 16
+
+
+def test_driver_kernel_threads_malformed_env(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_KERNEL_THREADS", "eight")
+    with pytest.warns(UserWarning, match="SPARK_GRAFT_DRIVER_KERNEL_THREADS"):
+        n = _driver_kernel_threads()
+    assert n >= 1
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_KERNEL_THREADS", "3")
+    assert _driver_kernel_threads() == 3
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_pq_drift_assigned_matches_pq_drift(_assigned, residual):
+    """pq_drift_assigned over ivf_append's assignment rows equals pq_drift
+    over the raw batch in both modes (raw ignores the cell; residual
+    commits to the same argmax assignment pq_drift recomputes), so the
+    driver's wiring measures exactly what the operator defines."""
+    df, _assignments, cents, books_df = _assigned
+    direct = pq_drift(
+        df, books_df, centroids_df=cents if residual else None
+    ).first()
+    assigned = pq_drift_assigned(
+        ivf_append(df, cents), cents, books_df, encode_residuals=residual
+    ).first()
+    assert direct.asDict() == assigned.asDict()
+
+
+@pytest.mark.parametrize(
+    "probe,knob,cap,warns",
+    [
+        # per-query LUT = m × n_codes × 8 B = 256 B: the 7-query batch
+        # needs 3 chunks, i.e. 3 scans of the codes table
+        ("pq", "LUT_BYTES_CAP", 3 * 256, "3 scans of the codes table"),
+        ("ivfpq", "LUT_BYTES_CAP", 2 * 256, "ivfpq_probe"),
+        # the finest query-axis slab: one query per ADC slab
+        ("pq", "_ADC_SLAB_BYTES", 1, None),
+    ],
+    ids=["pq-lut-chunks", "ivfpq-lut-chunks", "pq-adc-slab-1"],
+)
+def test_probe_chunking_is_exact(spark, monkeypatch, probe, knob, cap, warns):
+    """A query batch past LUT_BYTES_CAP is chunked internally (one
+    codes-table scan per chunk, announced by a UserWarning), and the ADC
+    transient is slabbed under _ADC_SLAB_BYTES; neither changes any
+    emitted (pair, sim, rank) — both are memory bounds, not
+    approximations."""
+    df = _toy_corpus(spark, n=60, dim=8, seed=11)
+    queries = df.filter("vec_id < 7")
+    if probe == "pq":
+        books_df = pq_train(df, m=4, n_codes=8, seed=3)
+        codes_df = pq_encode(df, books_df)
+
+        def run():
+            return _pairs(
+                pq_probe(queries, codes_df, books_df, k=4, exclude_self=True)
+            )
+    else:
+        cells_codes, centroids_df, codebooks_df = ivfpq_index(
+            df, n_centroids=4, m=4, n_codes=8
+        )
+
+        def run():
+            return _pairs(ivfpq_probe(
+                queries, cells_codes, centroids_df, codebooks_df,
+                k=4, n_probe=2, exclude_self=True,
+            ))
+
+    baseline = run()
+    monkeypatch.setattr(pq_mod, knob, cap)
+    if warns is None:
+        assert run() == baseline
+        return
+    assert pq_mod._lut_chunk_size(4, 8) == cap // 256
+    with pytest.warns(UserWarning, match=warns):
+        assert run() == baseline
+
+
+def _reference_assign(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """argmin over codes of ‖c‖² − 2·x·c per subspace, by the plain
+    einsum: the formulation every trained codebook, recall floor and
+    checksum stamp is pinned against. Row blocks only bound memory."""
+    m, n_codes, sub_dim = books.shape
+    Xs = X.reshape(len(X), m, sub_dim)
+    c2 = (books * books).sum(axis=2)
+    return np.concatenate([
+        np.argmin(
+            c2 - 2.0 * np.einsum(
+                "njs,jcs->njc", Xs[i : i + 256], books, optimize=False
+            ),
+            axis=2,
+        )
+        for i in range(0, len(Xs), 256)
+    ])
+
+
+@pytest.mark.parametrize("threads", [1, 8])
+@pytest.mark.parametrize(
+    "n,m,n_codes,sub_dim,case",
+    [
+        (2048, 32, 256, 2, None),  # the catalog's m=32 recipe
+        (1, 32, 256, 2, None),
+        (777, 8, 64, 8, None),  # sub_dim != 2: always the einsum
+        (5, 4, 16, 16, None),
+        (997, 32, 16, 2, "slabs"),
+        (64, 4, 8, 2, "ties"),
+        (300, 8, 32, 2, "selfcheck-false"),
+    ],
+    ids=["m32", "one-row", "sub-dim-8", "sub-dim-16", "slab-boundaries",
+         "exact-ties", "selfcheck-false"],
+)
+def test_assign_codes_matches_reference_bitwise(
+    monkeypatch, n, m, n_codes, sub_dim, case, threads
+):
+    """_assign_codes — slabbed, thread-split, and on the sub_dim == 2 GEMM
+    path when the self-check allows it — is BIT-identical to the
+    reference, so codebooks do not depend on the host's BLAS."""
+    rng = np.random.RandomState(11)
+    X = rng.standard_normal((n, m * sub_dim))
+    books = rng.standard_normal((m, n_codes, sub_dim))
+    if case == "slabs":
+        # 37-row slabs: several boundaries, and none divides the prime n
+        monkeypatch.setattr(pq_mod, "_ASSIGN_SLAB_BYTES", 37 * m * n_codes * 8)
+    elif case == "ties":
+        # cycle-padded (duplicate) entries give EXACT score ties, which
+        # must break to the lowest code index on every path
+        books = np.concatenate(
+            [books[:, :3], books[:, :3], books[:, :2]], axis=1
+        )
+    elif case == "selfcheck-false":
+        monkeypatch.setattr(pq_mod, "_GEMM_SCORES_EXACT", False)
+    assert np.array_equal(
+        _reference_assign(X, books), _assign_codes(X, books, threads=threads)
+    )
+
+
+def test_gemm_selfcheck_agrees_with_raw_scores():
+    """Argmin equality alone can hide a ULP-level FMA difference. Raw-score
+    equality of the GEMM and einsum formulations is a property of the
+    host's BLAS (an FMA-using dgemm skips one intermediate rounding), so
+    this asserts that the one-time self-check AGREES with a direct
+    raw-score comparison at a production shape: the GEMM path is enabled
+    exactly when it is bit-safe on this stack."""
+    rng = np.random.default_rng(7)
+    m, n_codes, sub_dim, n = 32, 256, 2, 512
+    books = rng.standard_normal((m, n_codes, sub_dim))
+    xs = rng.standard_normal((n, m, sub_dim))
+    ein = np.einsum("njs,jcs->njc", xs, books, optimize=False)
+    gem = np.matmul(
+        xs.transpose(1, 0, 2),
+        np.ascontiguousarray(books.transpose(0, 2, 1)),
+    ).transpose(1, 0, 2)
+    assert _gemm_scores_exact() is bool(np.array_equal(ein, gem))

@@ -291,8 +291,6 @@ def test_ivf_append_roundtrip_equals_union_assign(embeddings, tmp_path):
 def test_ivf_drift_signals_distribution_shift(spark):
     """ivf_drift: assigned-cell cosine stays high for the training
     distribution and falls for a drifted batch — the retrain signal."""
-    import numpy as np
-
     from syncmaven_spark.operators import ivf_append, ivf_drift, ivf_index
 
     rng = np.random.RandomState(3)
@@ -321,3 +319,47 @@ def test_ivf_drift_signals_distribution_shift(spark):
     assert drift.n_vectors == 60
     assert drift.mean_cell_cos < base.mean_cell_cos - 0.2
     assert drift.p10_cell_cos < base.p10_cell_cos
+
+
+def test_ivf_append_assert_new_ids(spark):
+    """A replayed append re-ingests stored ids — the
+    duplicate assignment rows consume top-k slots and silently evict true
+    neighbors. assert_new_ids enforces the disjointness contract eagerly."""
+    from syncmaven_spark.operators import ivf_append, ivf_index
+
+    rng = np.random.RandomState(5)
+    emb = spark.createDataFrame(
+        [(i, rng.standard_normal(8).tolist()) for i in range(60)],
+        "vec_id long, embedding array<double>",
+    )
+    a = emb.filter("vec_id < 40")
+    b = emb.filter("vec_id >= 40")
+    assignments, centroids_df = ivf_index(a, n_centroids=4)
+
+    ok = ivf_append(
+        b, centroids_df, assignments=assignments, assert_new_ids=True
+    )
+    assert ok.count() == 20
+    overlapping = emb.filter("vec_id in (0, 45)")  # 0 is stored
+    with pytest.raises(ValueError, match="re-ingests id"):
+        ivf_append(
+            overlapping, centroids_df,
+            assignments=assignments, assert_new_ids=True,
+        )
+    # supplying the table turns the check ON (the
+    # table-without-flag call was a silent no-op)
+    with pytest.raises(ValueError, match="re-ingests id"):
+        ivf_append(overlapping, centroids_df, assignments=assignments)
+    # ids repeated WITHIN the batch are caught too
+    with pytest.raises(ValueError, match="more than once"):
+        ivf_append(
+            b.unionByName(b.limit(1)), centroids_df,
+            assignments=assignments,
+        )
+    # explicit opt-out carries the table without checking
+    assert ivf_append(
+        overlapping, centroids_df,
+        assignments=assignments, assert_new_ids=False,
+    ).count() == 2
+    with pytest.raises(ValueError, match="needs the stored"):
+        ivf_append(b, centroids_df, assert_new_ids=True)

@@ -40,9 +40,12 @@ def scale_con():
     c.close()
 
 
-@pytest.mark.parametrize("name", ORACLED)
+@pytest.mark.parametrize("name", list(CATALOG))
 def test_query_matches_oracle(spark, con, name):
+    """Every catalog entry builds, materialises and matches its oracle; an
+    entry without an oracle fails here rather than going unchecked."""
     qd = CATALOG[name]
+    assert qd.oracle, f"{name} has no DuckDB oracle"
     df = qd.spark_fn(spark, SF_CORRECTNESS)
     result = compare(name, df, con, qd.oracle)
     assert result.ok, result.detail
@@ -219,12 +222,6 @@ def test_queries_md_in_sync():
         "QUERIES.md is stale — regenerate with "
         "`python -m syncmaven_spark.inventory`"
     )
-
-
-def test_all_queries_return_rows(spark):
-    for name, qd in CATALOG.items():
-        df = qd.spark_fn(spark, SF_CORRECTNESS)
-        assert df.count() >= 0, name  # materializes; schema must be stable
 
 
 @scale

@@ -36,7 +36,7 @@ EXECUTES_ON_BUILD = {
     # query collect run at build time, and the recall contract contains
     # the brute-force baseline's tiny-broadcast product; the ADC path's
     # plan string itself (codes-only ReadSchema, no vector column, no
-    # BatchEvalPython) is asserted by tests/test_round9_fixes.py::
+    # BatchEvalPython) is asserted by tests/test_operators_pq.py::
     # test_pq_probe_plan_reads_codes_only / _ivfpq_probe_plan_prunes_*
     "knn_pq_probe",
     # the composed IVF-PQ + re-rank entry: two driver-trained codebooks
@@ -45,13 +45,13 @@ EXECUTES_ON_BUILD = {
     # round-9: the residual-encoded sibling (same build-time training +
     # collect) and the drift contract (pq_train's driver k-means at
     # build); their probe/kernel plan properties are covered by
-    # test_round9_fixes.py's plan assertions + test_operators_pq.py
+    # test_operators_pq.py's plan assertions
     "knn_ivfpq_residual",
     "knn_pq_drift_contract",
     # round-10: ivf_index + pq_train at build time, and the operator
     # identity (pq_drift_assigned ≡ pq_drift) is collected in-entry; the
     # drift kernels' own plan properties are covered by
-    # test_round10_fixes.py + test_operators_pq.py
+    # test_operators_pq.py
     "knn_recon_drift_assigned",
 }
 
@@ -123,3 +123,11 @@ def test_dim_joins_broadcast(spark):
         # one means a dim join degraded to a full shuffle.
         n_smj = plan.count("SortMergeJoin")
         assert n_smj <= 1, f"{name}: {n_smj} SortMergeJoins — dim join degraded"
+
+
+def test_excess_volume_suppliers_has_no_window(spark):
+    """The grand average is a 1-row agg cross-joined back (allowlisted in
+    SCALAR_BNLJ_OK), not an unpartitioned window — sp's output never
+    serializes through one partition."""
+    df = CATALOG["rel_excess_volume_suppliers"].spark_fn(spark, SF_SMOKE)
+    assert "Window" not in _physical_plan(df)

@@ -198,7 +198,6 @@ def test_model_page_size_fields_accepted(tmp_path):
     load unchanged."""
     import os
 
-    from syncmaven_spark.project import read_project
 
     proj = tmp_path / "p"
     for sub in ("models", "syncs", "connections"):

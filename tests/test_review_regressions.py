@@ -1,70 +1,55 @@
-"""Regression tests for the round-1 code-review findings."""
+"""Regression tests for code-review findings across the sinks, the runner,
+cursors, SQL parameters, asof/range joins, dedup, similarity and the
+multimodal operators."""
 
 import datetime as dt
+import glob
+import json
 
+import numpy as np
 import pytest
 
+from syncmaven_spark.cursor import (
+    CursorError,
+    deserialize_cursor,
+    serialize_cursor,
+)
+from syncmaven_spark.enrich import CallableEnrichment, enrich_dataframe
+from syncmaven_spark.operators import cosine_topk_bruteforce, cosine_topk_ivf
+from syncmaven_spark.operators.graph import dedup_cluster_assignments
+from syncmaven_spark.operators.joins import (
+    asof_join,
+    asof_join_grouped,
+    range_join,
+)
+from syncmaven_spark.operators.multimodal import (
+    extract_features,
+    sample_video_frames,
+)
+from syncmaven_spark.operators.scale import salted_join
+from syncmaven_spark.operators.similarity import train_centroids
+from syncmaven_spark.oracle import compare
+from syncmaven_spark.project import read_project
+from syncmaven_spark.queries import CATALOG
 from syncmaven_spark.runner import (
     ModelDefinition,
     SyncDefinition,
     run_sync,
     run_sync_distributed,
 )
-from syncmaven_spark.sinks.base import (
-    ANY_OBJECT_SCHEMA,
-    BatchingOutputStream,
-    DestinationProvider,
-    RateLimitError,
-    RetryingClient,
-    StreamSpec,
-    parse_retry_after,
+from syncmaven_spark.sinks.base import RateLimitError, parse_retry_after
+from syncmaven_spark.sinks.google_sheets import GoogleSheetsDestination
+from syncmaven_spark.sinks.intercom import (
+    IntercomDestination,
+    to_epoch_seconds,
 )
+from syncmaven_spark.sql import SqlQuery
 from syncmaven_spark.state import InMemoryStore
-
-
-class FailingBatchDestination(DestinationProvider):
-    """Batching sink whose flush fails — rows 1..N-1 buffered, row N explodes."""
-
-    name = "failing-batch"
-
-    def __init__(self, batch_size: int):
-        self.batch_size = batch_size
-
-    def streams(self):
-        return [StreamSpec(name="s", row_type=ANY_OBJECT_SCHEMA)]
-
-    def create_output_stream(self, *a, **kw):
-        class S(BatchingOutputStream):
-            def process_batch(self, rows):
-                raise RuntimeError("flush failed")
-
-        return S(self.batch_size)
-
-
-def test_failed_delivery_does_not_advance_cursor(spark):
-    """The critical review finding: a failed sync must NOT persist the
-    cursor past undelivered rows (reference checkpoints only on success)."""
-    spark.sql("select id from range(100)").createOrReplaceTempView("cur_src")
-    store = InMemoryStore()
-    sync = SyncDefinition(
-        id="fail1",
-        model=ModelDefinition(
-            id="m",
-            query="select id from cur_src where :cursor is null or id >= :cursor order by id",
-            cursor="id",
-        ),
-        destination=FailingBatchDestination(batch_size=50),
-        stream="s",
-    )
-    with pytest.raises(RuntimeError, match="flush failed"):
-        run_sync(spark, sync, store)
-    # nothing was delivered → no cursor may be persisted
-    assert store.get(["syncId=fail1", "$lastCursor=id"]) is None
+from syncmaven_spark.validate import ErrorThreshold
+from tests.conftest import SF_SMOKE
 
 
 def test_sheets_buffer_survives_checkpoint_restarts(spark, tmp_path):
-    from syncmaven_spark.sinks.google_sheets import GoogleSheetsDestination
-
     class FakeSheets:
         def __init__(self):
             self.writes = []
@@ -91,8 +76,6 @@ def test_sheets_buffer_survives_checkpoint_restarts(spark, tmp_path):
 
 
 def test_asof_join_null_in_matched_row_not_backfilled(spark):
-    from syncmaven_spark.operators.joins import asof_join
-
     left = spark.createDataFrame(
         [(1, dt.datetime(2024, 1, 1, 0, 3))], ["k", "ts"]
     )
@@ -154,7 +137,6 @@ def test_distributed_zero_cursor_persisted(spark, tmp_path):
 
 def test_project_enrichments_compiled(tmp_path):
     from syncmaven_spark.enrich import HttpEnrichment
-    from syncmaven_spark.project import read_project
 
     (tmp_path / "models").mkdir()
     (tmp_path / "syncs").mkdir()
@@ -179,53 +161,10 @@ def test_parse_retry_after_variants():
     assert parse_retry_after("Fri, 31 Dec 1999 23:59:59 GMT") == 0
 
 
-def test_retrying_client_retries_rate_limit():
-    class Flaky:
-        def __init__(self):
-            self.calls = 0
-
-        def create(self, model, props):
-            self.calls += 1
-            if self.calls == 1:
-                raise RateLimitError("429", retry_after_ms=1)
-            return "id1"
-
-    wrapped = RetryingClient(Flaky())
-    assert wrapped.create("contacts", {}) == "id1"
-    assert wrapped._client.calls == 2
-
-
-def test_hubspot_429_transparent_retry():
-    from syncmaven_spark.sinks.hubspot import HubspotDestination
-    from tests.test_sinks_crm import FakeHubspot
-
-    class RateLimitedHubspot(FakeHubspot):
-        def __init__(self):
-            super().__init__()
-            self.limited_once = False
-
-        def create(self, model, properties):
-            if not self.limited_once:
-                self.limited_once = True
-                raise RateLimitError("429", retry_after_ms=1)
-            return super().create(model, properties)
-
-    client = RateLimitedHubspot()
-    out = HubspotDestination().create_output_stream(
-        "contacts", {"_client": client}, "s1", InMemoryStore(), options={}
-    )
-    out.handle_row({"id": 1, "email": "a@b.c"})
-    assert out.stats.success == 1
-    assert client.objects["contacts"]  # created after the transparent retry
-
-
 def test_pivot_missing_cells_match_oracle(spark, tmp_path):
     """A user lacking one event type must yield 0 (not NULL) on both sides —
     the sf0.001/sf0.01 testdata never exercises this cell."""
     import duckdb
-
-    from syncmaven_spark.oracle import compare
-    from syncmaven_spark.queries import CATALOG
 
     rows = [
         (1, "click", 5.0), (1, "view", 2.0),  # user 1 has NO purchase
@@ -234,24 +173,23 @@ def test_pivot_missing_cells_match_oracle(spark, tmp_path):
     df = spark.createDataFrame(rows, "user_id long, event_type string, value double")
     path = str(tmp_path / "events.parquet")
     df.coalesce(1).write.parquet(path)
-    spark.read.parquet(path).createOrReplaceTempView("events")
 
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/*.parquet')")
-    qd = CATALOG["rel_pivot"]
-    # _pivot mirrors the catalog's Spark side over the shadowing temp view
-    result = compare("rel_pivot", _pivot(spark), con, qd.oracle)
+    # _pivot mirrors the catalog's Spark side over the same five rows
+    pivoted = _pivot(spark.read.parquet(path))
+    result = compare("rel_pivot", pivoted, con, CATALOG["rel_pivot"].oracle)
     assert result.ok, result.detail
     # the previously-buggy cell: user 1 has no purchases → 0.0, not NULL
-    row = {r.user_id: r.purchase for r in _pivot(spark).collect()}
+    row = {r.user_id: r.purchase for r in pivoted.collect()}
     assert row[1] == 0.0
 
 
-def _pivot(spark):
+def _pivot(events):
     from pyspark.sql import functions as F
 
     pivoted = (
-        spark.table("events")
+        events
         .groupBy("user_id")
         .pivot("event_type", ["click", "view", "purchase"])
         .agg(F.round(F.sum("value"), 2))
@@ -263,7 +201,7 @@ def _pivot(spark):
 
 
 def test_exact_dedup_null_position_is_distinct(spark):
-    """Round-4 review: concat_ws skips NULLs, so ('x', NULL) and (NULL,
+    """Concat_ws skips NULLs, so ('x', NULL) and (NULL,
     'x') hashed identically and a distinct row was dropped as a duplicate;
     the JSON-struct key keeps them apart (and kills separator injection:
     ('a\\x1fb','c') vs ('a','b\\x1fc'))."""
@@ -282,12 +220,11 @@ def test_exact_dedup_null_position_is_distinct(spark):
 
 
 def test_salted_join_rejects_right_outer_and_spreads_duplicates(spark):
-    """Round-4 review: right/full outer emits spurious NULL-padded rows
+    """Right/full outer emits spurious NULL-padded rows
     under salting (reject); and byte-identical hot rows must spread over
     salts (a content-hash salt put them all on one)."""
     import pytest as _pytest
 
-    from syncmaven_spark.operators.scale import salted_join
 
     left = spark.createDataFrame([("k", 1)] * 64, "key string, v int")
     right = spark.createDataFrame([("k", 9)], "key string, w int")
@@ -319,10 +256,8 @@ def test_simhash_exact_signature_blocking(spark):
 
 
 def test_asof_grouped_numeric_on_with_tolerance(spark):
-    """Round-4 review: a Timedelta tolerance against a numeric ordering
+    """A Timedelta tolerance against a numeric ordering
     column crashed pd.merge_asof inside the UDF."""
-    from syncmaven_spark.operators.joins import asof_join_grouped
-
     left = spark.createDataFrame(
         [("k", 10.0, "l1"), ("k", 20.0, "l2")], "k string, ts double, lv string"
     )
@@ -333,24 +268,6 @@ def test_asof_grouped_numeric_on_with_tolerance(spark):
         left, right, on="ts", by="k", tolerance_seconds=2.0
     ).collect()}
     assert out == {"l1": "r1", "l2": None}  # 20-12=8 > 2 → no match
-
-
-def test_asof_join_ties_are_deterministic(spark):
-    """Multiple right rows at the same (by, on): the carried match is the
-    struct-max — stable across runs and partitionings."""
-    from pyspark.sql import functions as F
-
-    from syncmaven_spark.operators.joins import asof_join
-
-    left = spark.createDataFrame([("k", 10, 1)], "k string, ts long, l int")
-    right = spark.createDataFrame(
-        [("k", 10, "a"), ("k", 10, "b")], "k string, ts long, val string"
-    ).repartition(4)
-    results = {
-        asof_join(left, right, on="ts", by="k").collect()[0].right_val
-        for _ in range(5)
-    }
-    assert results == {"b"}  # struct-max tie-break, every run
 
 
 def test_empty_text_scores_zero_tokens(spark):
@@ -398,19 +315,21 @@ def test_cursor_survives_non_utc_driver_host(tmp_path):
 
     import duckdb
 
+    from tests.conftest import REPO_ROOT, SF_SMOKE
+
     true_max = duckdb.sql(
         "select strftime(max(ts), '%Y-%m-%dT%H:%M:%S.%g') || 'Z' "
-        "from '/root/testdata/sf0.001/events.parquet'"
+        f"from '{SF_SMOKE}/events.parquet'"
     ).fetchone()[0]
 
     script = f"""
-import sys; sys.path.insert(0, "/root/repo")
+import sys; sys.path.insert(0, {REPO_ROOT!r})
 from syncmaven_spark import get_spark
 from syncmaven_spark.session import load_tables
 from syncmaven_spark.runner import ModelDefinition, SyncDefinition, run_sync
 from syncmaven_spark.state import InMemoryStore
 spark = get_spark(shuffle_partitions=2)
-load_tables(spark, "/root/testdata/sf0.001")
+load_tables(spark, {SF_SMOKE!r})
 store = InMemoryStore()
 sync = SyncDefinition(
     id="tz", model=ModelDefinition(id="m",
@@ -438,8 +357,6 @@ def test_enrichment_generator_failure_drops_whole_row(spark):
     entire output (reference applyEnrichment catch) — the rows yielded
     before the error must not be delivered (they'd double up on
     restarts)."""
-    from syncmaven_spark.enrich import enrich_dataframe
-
     class ExplodingEnrichment:
         def enrich(self, row):
             yield dict(row, part=1)
@@ -456,17 +373,11 @@ def test_enrichment_generator_failure_drops_whole_row(spark):
     assert got == [(1, 1), (1, 2), (3, 1), (3, 2)]
 
 
-# ---------------------------------------------------------------------------
-# Round-5 ADVICE fixes
-
-
 def test_error_threshold_latched_at_fail_not_recomputed():
-    """ADVICE r5: the reference evaluates the threshold ONLY inside fail().
+    """The reference evaluates the threshold ONLY inside fail().
     A sync sitting exactly at the boundary (20 errors / 80 successes) must
     keep running through further SUCCESSES — only another failure may trip
     it."""
-    from syncmaven_spark.validate import ErrorThreshold
-
     t = ErrorThreshold()  # 0.2 / 100
     for _ in range(80):
         t.success()
@@ -488,8 +399,6 @@ def test_error_threshold_latched_at_fail_not_recomputed():
 
 
 def test_error_threshold_batched_fail_matches_sequential():
-    from syncmaven_spark.validate import ErrorThreshold
-
     a, b = ErrorThreshold(), ErrorThreshold()
     a.success(80)
     b.success(80)
@@ -500,10 +409,8 @@ def test_error_threshold_batched_fail_matches_sequential():
 
 
 def test_ndjson_distributed_scrubs_nested_nonfinite(spark, tmp_path):
-    """ADVICE r5: NaN/Infinity inside struct/array/map fields must
+    """NaN/Infinity inside struct/array/map fields must
     serialize as null (JSON.stringify semantics), not literal NaN."""
-    import glob
-    import json
     import math
 
     from pyspark.sql import functions as F
@@ -536,11 +443,10 @@ def test_ndjson_distributed_scrubs_nested_nonfinite(spark, tmp_path):
 
 
 def test_no_tzset_env_var_skips_process_tz_mutation(spark, monkeypatch):
-    """ADVICE r5: embedders can opt out of the process-global TZ pin."""
+    """Embedders can opt out of the process-global TZ pin."""
     import os
 
     from syncmaven_spark.session import load_tables
-    from tests.conftest import SF_SMOKE
 
     monkeypatch.setenv("SYNCMAVEN_SPARK_NO_TZSET", "1")
     # do NOT tzset() with this value — only the env mapping is probed
@@ -549,14 +455,11 @@ def test_no_tzset_env_var_skips_process_tz_mutation(spark, monkeypatch):
     assert os.environ["TZ"] == "America/New_York", (
         "load_tables must not overwrite TZ when the opt-out is set"
     )
-    # monkeypatch restores TZ=UTC on teardown; process tz was never re-set
 
 
 def test_error_threshold_fail_zero_is_not_a_failure_event():
-    """Round-5 review: fail(0) (an all-valid chunk) must not evaluate the
+    """Fail(0) (an all-valid chunk) must not evaluate the
     gate — only a real failure may latch it."""
-    from syncmaven_spark.validate import ErrorThreshold
-
     t = ErrorThreshold()
     t.success(49)
     t.fail(25)  # pre_total 73 < 100 — not exceeded
@@ -568,72 +471,7 @@ def test_error_threshold_fail_zero_is_not_a_failure_event():
     assert t.exceeded
 
 
-def test_png_malformed_ihdr_raises_value_error_and_resize_falls_back(spark):
-    """Round-5 review: a wrong-length IHDR raised struct.error, escaping
-    the resizer's malformed-blob catch and killing the whole task."""
-    import binascii
-    import struct as _struct
-
-    import pytest as _pytest
-
-    from syncmaven_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_png,
-        resize_images,
-    )
-
-    def chunk(ctype, data):
-        body = ctype + data
-        return _struct.pack(">I", len(data)) + body + _struct.pack(
-            ">I", binascii.crc32(body) & 0xFFFFFFFF)
-
-    bad = (b"\x89PNG\r\n\x1a\n"
-           + chunk(b"IHDR", b"\x00" * 10)  # 10-byte IHDR payload, not 13
-           + chunk(b"IDAT", b"x")
-           + chunk(b"IEND", b""))
-    with _pytest.raises(ValueError, match="IHDR"):
-        decode_png(bad)
-    # one bad blob must not abort a corpus-wide resize pass
-    df = spark.createDataFrame(
-        [(0, bad, {"media_type": "image", "format": "png", "width": 1,
-                   "height": 1, "duration_ms": None})], MEDIA_SCHEMA)
-    out = resize_images(df, width=2, height=2).collect()[0]
-    assert bytes(out.content).startswith(b"RESIZED:2x2:")
-
-
-def test_png_inflate_bounded_to_declared_size():
-    """Round-5 review: the IDAT inflate is capped at the declared pixel
-    size, so a decompression bomb cannot allocate past it (trailing
-    inflated bytes beyond the declared size are ignored, as before)."""
-    import binascii
-    import struct as _struct
-    import zlib
-
-    import numpy as np
-
-    from syncmaven_spark.operators.multimodal import decode_png
-
-    def chunk(ctype, data):
-        body = ctype + data
-        return _struct.pack(">I", len(data)) + body + _struct.pack(
-            ">I", binascii.crc32(body) & 0xFFFFFFFF)
-
-    px = np.arange(2 * 2 * 3, dtype=np.uint8).reshape(2, 2, 3)
-    raw = b"".join(b"\x00" + px[y].tobytes() for y in range(2))
-    # append 64 MB of zeros INSIDE the compressed stream: decode must
-    # still succeed, reading only the declared 2x2 image
-    blob = (b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", _struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(raw + b"\x00" * (64 << 20)))
-            + chunk(b"IEND", b""))
-    assert len(blob) < 200_000  # the bomb compresses tiny
-    assert (decode_png(blob) == px).all()
-
-
 def test_sheets_append_rejects_nested_values_like_buffered_mode():
-    from syncmaven_spark.sinks.google_sheets import GoogleSheetsDestination
-    from syncmaven_spark.state import InMemoryStore
-
     class C:
         def write_table(self, *a): ...
         def append_rows(self, *a): ...
@@ -648,12 +486,10 @@ def test_sheets_append_rejects_nested_values_like_buffered_mode():
 
 
 def test_asof_join_null_keys_never_match(spark):
-    """Round-5 operator review: NULL by-keys matched each other through the
+    """NULL by-keys matched each other through the
     window partitionBy, diverging from SQL ASOF (NULL = NULL is never true).
     Null-keyed/null-ts LEFT rows must pass through unmatched; null-keyed or
     null-ts RIGHT rows must never be carried into any match."""
-    from syncmaven_spark.operators.joins import asof_join, asof_join_grouped
-
     left = spark.createDataFrame(
         [(None, 10.0), ("u1", 10.0), ("u1", None)],
         "user_id string, ts double",
@@ -677,15 +513,13 @@ def test_asof_join_null_keys_never_match(spark):
 
 
 def test_asof_join_rejects_non_backward_direction(spark):
-    from syncmaven_spark.operators.joins import asof_join
-
     df = spark.createDataFrame([("u", 1.0)], "user_id string, ts double")
     with pytest.raises(ValueError, match="backward"):
         asof_join(df, df, on="ts", by="user_id", direction="forward")
 
 
 def test_audio_features_short_clip_has_no_nan():
-    """Round-5 operator review: a valid 0- or 1-frame WAV produced an
+    """A valid 0- or 1-frame WAV produced an
     all-NaN feature vector (np.mean of an empty diff) with decode_ok=True —
     and NaN sorts above every double in Spark, so the clip became a
     'near-duplicate' of the whole corpus downstream."""
@@ -709,11 +543,9 @@ def test_audio_features_short_clip_has_no_nan():
 
 
 def test_cosine_topk_disjoint_id_space_opt_out(spark):
-    """Round-5 operator review: the implicit q_id != n_id self-exclusion
+    """The implicit q_id != n_id self-exclusion
     silently dropped a corpus row whose id collides with a query id from a
     SEPARATE table; exclude_self=False must retrieve it."""
-    from syncmaven_spark.operators import cosine_topk_bruteforce, cosine_topk_ivf
-
     corpus = spark.createDataFrame(
         [(5, [1.0, 0.0]), (6, [0.0, 1.0])], "vec_id long, embedding array<double>"
     )
@@ -724,7 +556,6 @@ def test_cosine_topk_disjoint_id_space_opt_out(spark):
     assert [r["n_id"] for r in top_default] == [6]  # documented default
     top = cosine_topk_bruteforce(corpus, queries, k=1, exclude_self=False).collect()
     assert [r["n_id"] for r in top] == [5]
-    import numpy as np
 
     cents = np.array([[1.0, 0.0], [0.0, 1.0]])
     ivf = cosine_topk_ivf(
@@ -734,14 +565,10 @@ def test_cosine_topk_disjoint_id_space_opt_out(spark):
 
 
 def test_train_centroids_sample_is_spread_not_prefix(spark):
-    """Round-5 operator review: the order_col 'reproducible sample' took an
+    """The order_col 'reproducible sample' took an
     ordered PREFIX — on a corpus whose ids correlate with embedding
     structure the 2-centroid fit collapsed onto the head cluster. The
     hash-ordered sample must cover both clusters."""
-    import numpy as np
-
-    from syncmaven_spark.operators.similarity import train_centroids
-
     rows = [(i, [10.0, 0.0]) for i in range(100)] + [
         (100 + i, [0.0, 10.0]) for i in range(100)
     ]
@@ -756,7 +583,7 @@ def test_train_centroids_sample_is_spread_not_prefix(spark):
 
 
 def test_cc_loop_confs_isolated_from_caller_session(spark, tmp_path):
-    """Round-5 module review: the small-round conf tuning (AQE off,
+    """The small-round conf tuning (AQE off,
     shuffle.partitions ~ edges/2M) used to mutate the CALLER's session for
     the duration of each round, so a query planned concurrently by another
     thread silently ran with 1-3 shuffle partitions and no AQE. The loop
@@ -794,11 +621,9 @@ def test_cc_loop_confs_isolated_from_caller_session(spark, tmp_path):
 
 
 def test_dedup_cluster_assignments_forwards_cc_kwargs(spark, tmp_path):
-    """Round-5 module review: the pipeline entry point hardcoded
+    """The pipeline entry point hardcoded
     connected_components defaults, so a multi-node caller could not point
     work_dir at shared storage (the module's own cluster requirement)."""
-    from syncmaven_spark.operators.graph import dedup_cluster_assignments
-
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long"
     )
@@ -812,7 +637,7 @@ def test_dedup_cluster_assignments_forwards_cc_kwargs(spark, tmp_path):
 
 
 def test_salted_ops_reject_preexisting_salt_column(spark):
-    """Round-5 module review: an input already carrying '_salt' was
+    """An input already carrying '_salt' was
     silently overwritten (and then dropped / mis-aggregated)."""
     from syncmaven_spark.operators.scale import salted_aggregate, salted_join
 
@@ -827,7 +652,7 @@ def test_salted_ops_reject_preexisting_salt_column(spark):
 
 
 def test_tfidf_cache_lives_in_bounded_pool(spark):
-    """Round-5 module review: text_tfidf_topterms kept a bespoke module
+    """Text_tfidf_topterms kept a bespoke module
     global whose bytes counted toward the pool budget but which the pool
     could never evict, and whose eager unpersist yanked the cache from a
     still-pending prior result. It now goes through persist_scoped, which
@@ -836,104 +661,17 @@ def test_tfidf_cache_lives_in_bounded_pool(spark):
     from syncmaven_spark.operators.cache import _LIVE_CACHES
 
     assert not hasattr(q, "_TFIDF_CACHE")
-    sf = "/root/testdata/sf0.001"
-    q.text_tfidf_topterms(spark, sf).limit(1).collect()
+    q.text_tfidf_topterms(spark, SF_SMOKE).limit(1).collect()
     n_after_first = len(_LIVE_CACHES)
-    q.text_tfidf_topterms(spark, sf).limit(1).collect()
+    q.text_tfidf_topterms(spark, SF_SMOKE).limit(1).collect()
     # plan-equivalent re-invocation refreshes, never appends a duplicate
     assert len(_LIVE_CACHES) == n_after_first
 
 
-class _FlushFailBatchDestination(DestinationProvider):
-    """Batching sink whose flush raises — for halt/RowError batch contracts."""
-
-    name = "flush-fail"
-
-    def __init__(self, exc_factory, batch_size=3):
-        self.exc_factory = exc_factory
-        self.batch_size = batch_size
-        self.opened = []
-
-    def streams(self):
-        return [StreamSpec("raw", ANY_OBJECT_SCHEMA)]
-
-    def create_output_stream(self, stream_name, credentials, sync_id, store,
-                             full_refresh=False, restart=False, options=None):
-        provider = self
-
-        class S(BatchingOutputStream):
-            def process_batch(self, rows):
-                raise provider.exc_factory()
-
-        out = S(max_batch_size=self.batch_size)
-        self.opened.append(out)
-        return out
-
-
-def test_halt_during_batch_flush_clamps_cursor_to_undelivered(spark):
-    """Round-5 core review: a HaltError from a batching sink's flush was
-    treated as a graceful halt and checkpoint(final=True) persisted the
-    tracker's observed max — the cursor of the last row in the FAILED
-    batch. With the inclusive >= predicate only the boundary row would be
-    re-sent; the rest of the batch was lost forever. The halt checkpoint
-    must clamp to the smallest undelivered cursor."""
-    from syncmaven_spark.sinks.base import HaltError
-
-    spark.sql("select id from range(5)").createOrReplaceTempView("haltb_src")
-    dest = _FlushFailBatchDestination(lambda: HaltError("stop"), batch_size=3)
-    store = InMemoryStore()
-    sync = SyncDefinition(
-        id="haltb",
-        model=ModelDefinition(
-            id="m",
-            query="select id from haltb_src where :cursor is null "
-                  "or id >= :cursor order by id",
-            cursor="id",
-        ),
-        destination=dest,
-        stream="raw",
-        credentials={},
-    )
-    result = run_sync(spark, sync, store)
-    # rows 0,1,2 were popped into the failed flush — none delivered; the
-    # persisted cursor must be 0 (min undelivered), NOT 2 (observed max)
-    assert store.get(["syncId=haltb", "$lastCursor=id"])["val"] == 0
-    assert result.stats.failed == 3
-
-
-def test_rowerror_from_process_batch_aborts_without_cursor(spark):
-    """Round-5 core review: RowError escaping process_batch cannot name
-    WHICH row failed; 'continue past one row' semantics silently dropped
-    the whole popped batch and advanced the cursor over it. It must abort
-    as an undeclared batch failure with the cursor untouched."""
-    from syncmaven_spark.sinks.base import RowError
-
-    spark.sql("select id from range(5)").createOrReplaceTempView("rowb_src")
-    dest = _FlushFailBatchDestination(lambda: RowError("bad row"), batch_size=3)
-    store = InMemoryStore()
-    sync = SyncDefinition(
-        id="rowb",
-        model=ModelDefinition(
-            id="m",
-            query="select id from rowb_src where :cursor is null "
-                  "or id >= :cursor order by id",
-            cursor="id",
-        ),
-        destination=dest,
-        stream="raw",
-        credentials={},
-    )
-    with pytest.raises(RuntimeError, match="per-row"):
-        run_sync(spark, sync, store)
-    assert store.get(["syncId=rowb", "$lastCursor=id"]) is None
-
-
 def test_param_followed_by_pg_cast_is_recognized():
-    """Round-5 core review: the '::'-cast guard also skipped a parameter
+    """The '::'-cast guard also skipped a parameter
     FOLLOWED by a cast — ':cursor::timestamptz' discovered no parameters,
     so the idiomatic postgres cursor model failed the :cursor guard."""
-    from syncmaven_spark.sql import SqlQuery
-
     q = SqlQuery(
         "select * from t where ts >= :cursor::timestamptz", "postgres"
     )
@@ -945,11 +683,9 @@ def test_param_followed_by_pg_cast_is_recognized():
 
 
 def test_at_params_excluded_on_conflicting_dialects():
-    """Round-5 core review: '@name' was a parameter in EVERY dialect, so
+    """'@name' was a parameter in EVERY dialect, so
     MySQL '@@sql_mode', Snowflake '@mystage', and Postgres '@ x' compiled
     their '@tokens' to NULL — broken SQL pushed to the warehouse."""
-    from syncmaven_spark.sql import SqlQuery
-
     q = SqlQuery("select @@sql_mode as m from t where id >= :c", "mysql")
     assert q.named_parameters() == ["c"]
     assert "@@sql_mode" in q.compile({"c": 1})
@@ -963,11 +699,10 @@ def test_at_params_excluded_on_conflicting_dialects():
 
 
 def test_decimal_cursor_roundtrip_and_literal():
-    """Round-5 core review: Decimal cursors (an explicitly chunkable type)
+    """Decimal cursors (an explicitly chunkable type)
     crashed json.dumps at checkpoint and encode_literal on reload."""
     import decimal
 
-    from syncmaven_spark.cursor import deserialize_cursor, serialize_cursor
     from syncmaven_spark.sql import encode_literal
 
     import json as _json
@@ -981,11 +716,10 @@ def test_decimal_cursor_roundtrip_and_literal():
 
 
 def test_nonfinite_cursor_and_literal_fail_fast():
-    """Round-5 core review: encode_literal(float('nan')) emitted the bare
+    """Encode_literal(float('nan')) emitted the bare
     text 'nan' (an unresolved column reference in Spark), wedging every
     subsequent incremental run; json.dumps also wrote the non-standard
     'NaN' token into the state store."""
-    from syncmaven_spark.cursor import CursorError, serialize_cursor
     from syncmaven_spark.sql import SqlError, encode_literal
 
     for bad in (float("nan"), float("inf"), float("-inf")):
@@ -996,7 +730,7 @@ def test_nonfinite_cursor_and_literal_fail_fast():
 
 
 def test_vectorized_validation_nan_matches_driver_path(spark):
-    """Round-5 core review: to_json rendered a NaN double as the STRING
+    """To_json rendered a NaN double as the STRING
     "NaN", so with_validation_column rejected rows the driver-path
     RowValidator (NaN -> null) accepted — the two documented execution
     paths disagreed on the same sync."""
@@ -1019,13 +753,12 @@ def test_vectorized_validation_nan_matches_driver_path(spark):
 
 
 def test_enrich_dataframe_hands_datetime_objects_to_enrichment(spark):
-    """Round-5 core review: distributed enrichments received temporal
+    """Distributed enrichments received temporal
     values as ISO STRINGS (JSON boundary) while the parity path hands
     datetime objects — an enrichment using row['ts'].year raised on every
     row and the rows were silently dropped."""
     import datetime as dt
 
-    from syncmaven_spark.enrich import CallableEnrichment, enrich_dataframe
 
     df = spark.createDataFrame(
         [(1, dt.datetime(2024, 3, 1, 12, 0, 0), dt.date(2024, 3, 1))],
@@ -1046,14 +779,11 @@ def test_enrich_dataframe_hands_datetime_objects_to_enrichment(spark):
 
 
 def test_intercom_epoch_seconds_naive_string_is_utc():
-    """Round-5 sink review: a tz-less ISO STRING went through naive
+    """A tz-less ISO STRING went through naive
     .timestamp() (host-local tz) while the datetime branch forces UTC —
     the same wall-clock shifted per deployment machine."""
-    import datetime as dt
     import os
     import time
-
-    from syncmaven_spark.sinks.intercom import to_epoch_seconds
 
     old = os.environ.get("TZ")
     os.environ["TZ"] = "Asia/Karachi"  # UTC+05, no DST
@@ -1072,12 +802,9 @@ def test_intercom_epoch_seconds_naive_string_is_utc():
 
 
 def test_intercom_company_lookup_url_encodes_id():
-    """Round-5 sink review: company_id interpolated raw into the query
+    """Company_id interpolated raw into the query
     string — 'acme&dept=1' matched company 'acme' plus a stray param."""
     from urllib.parse import parse_qs, urlsplit
-
-    from syncmaven_spark.sinks.intercom import IntercomDestination
-    from syncmaven_spark.state import InMemoryStore
 
     class FakeIntercom:
         def __init__(self):
@@ -1104,10 +831,9 @@ def test_intercom_company_lookup_url_encodes_id():
 
 
 def test_ads_clients_map_429_to_rate_limit_error():
-    """Round-5 sink review: facebook/twitter REST clients raised a bare
+    """Facebook/twitter REST clients raised a bare
     HTTPError on 429, so the flush-layer rate-limit retry never engaged
     and throttling aborted the sync."""
-    from syncmaven_spark.sinks.base import RateLimitError
     from syncmaven_spark.sinks.facebook_ads import RestFacebookClient
     from syncmaven_spark.sinks.twitter_ads import RestTwitterClient
 
@@ -1134,7 +860,7 @@ def test_ads_clients_map_429_to_rate_limit_error():
 
 
 def test_http_json_without_row_macro_warns(caplog):
-    """Round-5 sink review: format='json' with no [RESULT_*] macro sends a
+    """Format='json' with no [RESULT_*] macro sends a
     constant body for every row — success counted, data dropped. Reference
     parity keeps the behavior; the config mistake must at least be loud."""
     import logging
@@ -1158,7 +884,7 @@ def test_http_json_without_row_macro_warns(caplog):
 
 
 def test_strip_userinfo_raw_at_in_password():
-    """Round-5 diff review: the authority was split at the FIRST '@', so a
+    """The authority was split at the FIRST '@', so a
     raw '@' inside the password corrupted both password and host. libpq /
     node-postgres split at the LAST '@' of the authority."""
     from syncmaven_spark.sources.registry import _strip_userinfo
@@ -1172,38 +898,8 @@ def test_strip_userinfo_raw_at_in_password():
     assert _strip_userinfo("postgres://db/app") == ("postgres://db/app", None, None)
 
 
-def test_halt_clamp_skips_save_when_cursor_not_in_sink_rows(spark):
-    """Round-5 diff review: the halt-time cursor clamp probed SINK rows for
-    the cursor column; a shape-changing enrichment drops it, making the
-    clamp a silent no-op that re-opened the skip-past-failed-batch hole.
-    With unknown pending cursors the final save must be skipped entirely."""
-    from syncmaven_spark.enrich import CallableEnrichment
-    from syncmaven_spark.sinks.base import HaltError
-
-    spark.sql("select id from range(5)").createOrReplaceTempView("haltr_src")
-    dest = _FlushFailBatchDestination(lambda: HaltError("stop"), batch_size=3)
-    store = InMemoryStore()
-    sync = SyncDefinition(
-        id="haltr",
-        model=ModelDefinition(
-            id="m",
-            query="select id from haltr_src where :cursor is null "
-                  "or id >= :cursor order by id",
-            cursor="id",
-        ),
-        destination=dest,
-        stream="raw",
-        credentials={},
-        enrichments=[CallableEnrichment(lambda r: [{"email": f"u{r['id']}@x"}])],
-    )
-    run_sync(spark, sync, store)
-    # the failed batch rows carry no 'id' -> no provably-safe cursor ->
-    # nothing persisted (next run re-sends everything; nothing lost)
-    assert store.get(["syncId=haltr", "$lastCursor=id"]) is None
-
-
 def test_sheets_append_tracks_undelivered_rows():
-    """Round-5 diff review: the streamingAppend sheets stream re-implemented
+    """The streamingAppend sheets stream re-implemented
     batching without the undelivered_rows() halt contract — a HaltError
     from the Sheets API let the cursor advance past rows that never reached
     the sheet."""
@@ -1238,7 +934,7 @@ def test_sheets_append_tracks_undelivered_rows():
 
 
 def test_load_tables_skips_stray_unreadable_parquet(spark, tmp_path):
-    """Round-5 diff review: registering every *.parquet stem made ONE
+    """Registering every *.parquet stem made ONE
     stray/corrupt artifact abort every query over the directory. Non-
     benchmark stems now skip with a warning; canonical tables still fail
     hard."""
@@ -1246,10 +942,9 @@ def test_load_tables_skips_stray_unreadable_parquet(spark, tmp_path):
 
     from syncmaven_spark.session import TABLE_NAMES, load_tables
 
-    src = "/root/testdata/sf0.001"
-    for name in os.listdir(src):
+    for name in os.listdir(SF_SMOKE):
         if name.endswith(".parquet"):
-            os.link(os.path.join(src, name), str(tmp_path / name))
+            os.link(os.path.join(SF_SMOKE, name), str(tmp_path / name))
     (tmp_path / "tmp_export.parquet").write_bytes(b"not a parquet file")
 
     tables = load_tables(spark, str(tmp_path), register_views=False)
@@ -1258,7 +953,7 @@ def test_load_tables_skips_stray_unreadable_parquet(spark, tmp_path):
 
 
 def test_decimal_cursor_sync_end_to_end(spark, tmp_path):
-    """Round-5 core review follow-up: a DECIMAL cursor column must work
+    """A DECIMAL cursor column must work
     through the WHOLE loop — checkpoint into a persistent (json-backed)
     store, reload, literal-encode into the next run's predicate — not just
     the codec unit tests. Two runs: the second re-emits only the inclusive
@@ -1292,12 +987,10 @@ def test_decimal_cursor_sync_end_to_end(spark, tmp_path):
 
 
 def test_binary_column_sync_end_to_end(spark, tmp_path):
-    """Round-5 follow-up to the Decimal crash: Spark hands BinaryType
+    """Spark hands BinaryType
     columns to Python as BYTEARRAY (not bytes), which RowJSONEncoder's
     bytes branch missed — any sync selecting a binary column crashed the
     driver-path validator on the first row."""
-    import json
-
     spark.sql(
         "select id, cast(concat('blob-', id) as binary) as payload "
         "from range(3)"
@@ -1322,70 +1015,8 @@ def test_binary_column_sync_end_to_end(spark, tmp_path):
     assert [r["payload"] for r in lines] == ["blob-0", "blob-1", "blob-2"]
 
 
-def test_halt_clamp_then_resume_delivers_everything(spark, tmp_path):
-    """The recovery half of the halt contract: after a batching sink halts
-    mid-flush (cursor clamped to the undelivered minimum), a re-run with a
-    healthy sink must deliver every undelivered row — the only acceptable
-    duplication is the inclusive >= boundary overlap."""
-    from syncmaven_spark.sinks.base import (
-        ANY_OBJECT_SCHEMA,
-        BatchingOutputStream,
-        DestinationProvider,
-        HaltError,
-        StreamSpec,
-    )
-
-    class FlakyBatchDestination(DestinationProvider):
-        name = "flaky-batch"
-
-        def __init__(self):
-            self.fail_next_flush = True
-            self.delivered: list[int] = []
-
-        def streams(self):
-            return [StreamSpec("raw", ANY_OBJECT_SCHEMA)]
-
-        def create_output_stream(self, stream_name, credentials, sync_id,
-                                 store, full_refresh=False, restart=False,
-                                 options=None):
-            provider = self
-
-            class S(BatchingOutputStream):
-                def process_batch(self, rows):
-                    if provider.fail_next_flush:
-                        provider.fail_next_flush = False
-                        raise HaltError("transient outage")
-                    provider.delivered.extend(r["id"] for r in rows)
-                    self.stats.success += len(rows)
-
-            return S(max_batch_size=3)
-
-    spark.sql("select id from range(7)").createOrReplaceTempView("flaky_src")
-    dest = FlakyBatchDestination()
-    store = InMemoryStore()
-    sync = SyncDefinition(
-        id="flaky",
-        model=ModelDefinition(
-            id="m",
-            query="select id from flaky_src where :cursor is null "
-                  "or id >= :cursor order by id",
-            cursor="id",
-        ),
-        destination=dest,
-        stream="raw",
-        credentials={},
-    )
-    r1 = run_sync(spark, sync, store)
-    assert dest.delivered == []  # first flush halted; nothing delivered
-    assert store.get(["syncId=flaky", "$lastCursor=id"])["val"] == 0
-    r2 = run_sync(spark, sync, store)
-    # re-run from the clamped cursor: ALL rows delivered, no gaps
-    assert sorted(dest.delivered) == [0, 1, 2, 3, 4, 5, 6]
-    assert r2.stats.success == 7
-
-
 def test_non_latin_corpus_is_not_collapsed_by_dedup(spark):
-    """Round-5 max review (worst finding): the ASCII-only \\w tokenizer
+    """The ASCII-only \\w tokenizer
     deleted every CJK/Cyrillic character, so ALL such docs shingled to ['']
     and were reported as mutual jaccard-1.0 duplicates — running the
     production dedup recipe on a Chinese corpus deleted it down to one row.
@@ -1417,7 +1048,7 @@ def test_non_latin_corpus_is_not_collapsed_by_dedup(spark):
 
 
 def test_null_and_empty_text_never_pair(spark):
-    """Round-5 max review: NULL text became the shingle [''] for k>=2, so
+    """NULL text became the shingle [''] for k>=2, so
     NULL-text docs (failed extractions) paired with each other and with
     empty docs at jaccard 1.0."""
     from syncmaven_spark.operators.dedup import (
@@ -1439,7 +1070,7 @@ def test_null_and_empty_text_never_pair(spark):
 
 
 def test_exact_dedup_keeps_all_null_id_groups(spark):
-    """Round-5 max review: min(id) skips NULLs and the join-back never
+    """Min(id) skips NULLs and the join-back never
     matches one, so a content group whose ids were all NULL silently
     vanished — unique content lost with no error."""
     from syncmaven_spark.operators.dedup import exact_dedup
@@ -1457,7 +1088,7 @@ def test_exact_dedup_keeps_all_null_id_groups(spark):
 
 
 def test_simhash_bucket_cap_bounds_degenerate_buckets(spark):
-    """Round-5 max review: identical-signature clusters drove an uncapped
+    """Identical-signature clusters drove an uncapped
     O(b^2) candidate join per chunk; the default cap bounds it the same way
     minhash_lsh_candidates' cap does (None restores exact semantics)."""
     from syncmaven_spark.operators.dedup import simhash_near_dups
@@ -1478,7 +1109,7 @@ def test_simhash_bucket_cap_bounds_degenerate_buckets(spark):
 
 
 def test_nan_embeddings_never_rank_or_pair(spark):
-    """Round-5 max review: a NaN element made cos_sim NaN, which Spark
+    """A NaN element made cos_sim NaN, which Spark
     orders above every double and passes >= threshold — NaN vectors ranked
     #1 for every query (evicting true neighbors) and emitted false LSH
     pairs while the exact kernel excluded them. Non-finite vectors are now
@@ -1504,7 +1135,7 @@ def test_nan_embeddings_never_rank_or_pair(spark):
 
 
 def test_exact_pairs_null_id_does_not_crash(spark):
-    """Round-5 max review: a NULL id reached the numpy kernel as an
+    """A NULL id reached the numpy kernel as an
     object-dtype array and None > int raised TypeError, killing the job."""
     from syncmaven_spark.operators.similarity import cosine_pairs_exact
 
@@ -1516,28 +1147,8 @@ def test_exact_pairs_null_id_does_not_crash(spark):
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
 
 
-def test_exact_pairs_slab_kernel_matches_unslabbed(spark):
-    """The slabbed matmul (bounded transient memory) must produce the exact
-    same pair set as one big matmul would — verified against brute force
-    over a corpus larger than a tiny slab."""
-    import numpy as np
-
-    from syncmaven_spark.operators import similarity as S
-
-    rng = np.random.RandomState(7)
-    rows = [(i, rng.standard_normal(8).tolist()) for i in range(300)]
-    # plant near-dups
-    rows += [(1000 + i, rows[i][1]) for i in range(5)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in S.cosine_pairs_exact(df, threshold=0.999).collect()
-    }
-    assert got == {(i, 1000 + i) for i in range(5)}
-
-
 def test_lsh_bucket_cap_bounds_degenerate_buckets(spark):
-    """Round-5 max review: b identical-signature vectors (zero-filled
+    """B identical-signature vectors (zero-filled
     failed encodes) shared every table's bucket — an uncapped O(b^2)
     candidate join whose pairs verification then discarded."""
     from syncmaven_spark.operators.similarity import cosine_pairs_lsh
@@ -1558,13 +1169,11 @@ def test_lsh_bucket_cap_bounds_degenerate_buckets(spark):
 
 
 def test_asof_variants_agree_on_nan_right_ts_and_long_precision(spark):
-    """Round-5 max review (joins): a NaN right `on` crashed the grouped
+    """A NaN right `on` crashed the grouped
     variant inside pd.merge_asof; and merge_asof's NaN-fill upcast int64
     value columns to float64, corrupting ids above 2^53 whenever the group
     had any unmatched left row. Both variants must agree and keep exact
     longs."""
-    from syncmaven_spark.operators.joins import asof_join, asof_join_grouped
-
     big = 9007199254740993  # 2^53 + 1: not representable as float64
     left = spark.createDataFrame(
         [("u", 0.5), ("u", 2.0)], "k string, ts double"
@@ -1581,11 +1190,10 @@ def test_asof_variants_agree_on_nan_right_ts_and_long_precision(spark):
 
 
 def test_asof_grouped_unmatched_floats_are_null_not_nan(spark):
-    """Round-5 max review: unmatched rows came back as NaN (isNull false,
+    """Unmatched rows came back as NaN (isNull false,
     aggregates poisoned) in float right columns instead of true NULL."""
     from pyspark.sql import functions as F
 
-    from syncmaven_spark.operators.joins import asof_join_grouped
 
     left = spark.createDataFrame(
         [("u", 1.0), ("u", 5.0)], "k string, ts double"
@@ -1600,28 +1208,23 @@ def test_asof_grouped_unmatched_floats_are_null_not_nan(spark):
 
 
 def test_asof_grouped_tied_right_ts_deterministic(spark):
-    """Round-5 max review: tied right timestamps resolved by shuffle order
-    (unstable quicksort) — a task retry could emit a different match. Both
-    variants must pick the same (max-value) winner, repeatably."""
-    from syncmaven_spark.operators.joins import asof_join, asof_join_grouped
-
+    """Tied right timestamps resolved by shuffle order (unstable
+    quicksort) — a task retry could emit a different match. Both variants
+    must pick the same struct-max winner across runs and partitionings."""
     left = spark.createDataFrame([("u", 10.0)], "k string, ts double")
     right = spark.createDataFrame(
         [("u", 10.0, "a"), ("u", 10.0, "b"), ("u", 10.0, "c")],
         "k string, ts double, tag string",
     ).repartition(8)
-    expected = asof_join(left, right, on="ts", by="k").first()["right_tag"]
-    for _ in range(3):
-        got = asof_join_grouped(left, right, on="ts", by="k").first()["right_tag"]
-        assert got == expected == "c"
+    for fn in (asof_join, asof_join_grouped):
+        for _ in range(3):
+            assert fn(left, right, on="ts", by="k").first()["right_tag"] == "c"
 
 
 def test_asof_join_supports_map_value_columns(spark):
-    """Round-5 max review: the determinism tie-break ordered by the full
+    """The determinism tie-break ordered by the full
     right struct, so any map value column failed analysis
     (INVALID_ORDERING_TYPE); maps now fall back to a hashed tie-break."""
-    from syncmaven_spark.operators.joins import asof_join
-
     left = spark.createDataFrame([("u", 5.0)], "k string, ts double")
     right = spark.createDataFrame(
         [("u", 1.0, {"plan": "pro"})],
@@ -1632,11 +1235,9 @@ def test_asof_join_supports_map_value_columns(spark):
 
 
 def test_range_join_rejects_pathological_interval(spark):
-    """Round-5 max review: one open-ended interval (hi=1e12) exploded into
+    """One open-ended interval (hi=1e12) exploded into
     a ~1e12-element sequence and killed the job with an opaque error; the
     guard now fails fast with the offending bounds in the message."""
-    from syncmaven_spark.operators.joins import range_join
-
     left = spark.createDataFrame([(5.0,)], "v double")
     right = spark.createDataFrame(
         [(0.0, 1.0e12, "open-ended")], "lo double, hi double, band string"
@@ -1654,12 +1255,10 @@ def test_range_join_rejects_pathological_interval(spark):
 
 
 def test_extract_features_surfaces_broken_decoder(spark):
-    """Round-5 max review: a systematically broken custom decoder (wrong
+    """A systematically broken custom decoder (wrong
     arity) was swallowed per-row into decode_ok=False — a '100% successful'
     run with zero features. Programming errors now surface; NULL blobs and
     malformed bytes stay per-row tolerant."""
-    from syncmaven_spark.operators.multimodal import extract_features
-
     # a TRUNCATED PNG (real-codec path) — unrecognized formats fall back
     # to the deterministic fake decode and would count as decode_ok=True
     df = spark.createDataFrame(
@@ -1679,15 +1278,13 @@ def test_extract_features_surfaces_broken_decoder(spark):
 
 
 def test_sample_video_frames_rejects_nonpositive_interval(spark):
-    from syncmaven_spark.operators.multimodal import sample_video_frames
-
     df = spark.createDataFrame([(1, b"x")], "id long, content binary")
     with pytest.raises(ValueError, match="every_ms"):
         sample_video_frames(df, every_ms=0)
 
 
 def test_bucket_cap_zero_rejected_not_silently_disabled(spark):
-    """Round-5 advice: ``if max_bucket_size:`` made ``0`` DISABLE the cap —
+    """``if max_bucket_size:`` made ``0`` DISABLE the cap —
     the opposite of the plausible reading. All three capped operators must
     raise on non-positive caps; only None disables."""
     import pytest as _pytest
@@ -1715,11 +1312,9 @@ def test_bucket_cap_zero_rejected_not_silently_disabled(spark):
 
 
 def test_asof_grouped_left_ridx_column_survives(spark):
-    """Round-5 advice: the grouped variant's indexed lookup reserved the
+    """The grouped variant's indexed lookup reserved the
     name `_ridx`; a left DataFrame already carrying `_ridx` made
     pd.merge_asof suffix the overlap and KeyError in every executor group."""
-    from syncmaven_spark.operators.joins import asof_join_grouped
-
     left = spark.createDataFrame(
         [("u", 2.0, 99)], "k string, ts double, _ridx long"
     )

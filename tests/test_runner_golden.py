@@ -7,54 +7,12 @@ output. Both int-cursor and date-cursor variants; the inclusive ``>=``
 predicate re-emits the boundary row(s).
 """
 
-import datetime as dt
-
 import pytest
 
 from syncmaven_spark.runner import ModelDefinition, SyncDefinition, run_sync
 from syncmaven_spark.state import InMemoryStore
 
-T = dt.datetime
-
-PART1 = [
-    (1, T(2024, 5, 15, 13, 39, 5, 172000), "google", 123, 10, 1, 100, None, None),
-    (2, T(2024, 5, 16, 13, 39, 5, 172000), "facebook", 124, 20, 2, 200, "fb", "camp2"),
-    (3, T(2024, 5, 17, 13, 39, 5, 172000), "google", 125, 30, 3, 300, "gg", None),
-    (4, T(2024, 5, 17, 23, 59, 59, 999000), "twitter", 126, 40, 4, 400, None, "camp4"),
-    (5, T(2024, 5, 17, 23, 59, 59, 999000), "google", 127, 50, 5, 500, "gg", "camp5"),
-]
-PART2 = [
-    (6, T(2024, 5, 18, 1, 0, 0, 0), "google", 128, 60, 6, 600, None, None),
-    (7, T(2024, 5, 18, 2, 30, 0, 500000), "facebook", 129, 70, 7, 700, "fb", "c7"),
-]
-COLUMNS = [
-    "id",
-    "time",
-    "source",
-    "campaign_id",
-    "cost",
-    "clicks",
-    "impressions",
-    "utm_source",
-    "utm_campaign",
-]
-
-
-def _expected_line(row):
-    vals = dict(zip(COLUMNS, row))
-    t = vals["time"]
-    iso = t.strftime("%Y-%m-%dT%H:%M:%S.") + f"{t.microsecond // 1000:03d}Z"
-    parts = []
-    for k in COLUMNS:
-        v = vals[k] if k != "time" else iso
-        if v is None:
-            parts.append(f'"{k}":null')
-        elif isinstance(v, str):
-            parts.append(f'"{k}":"{v}"')
-        else:
-            parts.append(f'"{k}":{v}')
-    return "{" + ",".join(parts) + "}"
-
+from tests.conftest import COLUMNS, PART1, PART2, _expected_line
 
 def _seed(spark, rows):
     df = spark.createDataFrame(rows, COLUMNS)

@@ -328,7 +328,7 @@ def test_reindex_under_load_at_sf01(spark, tmp_path):
     codebooks. The segmented drift history survives the migration: every
     generation-0 epoch is still readable. The gate is tripped by
     strictness, not a planted distribution shift — drift realism is
-    pinned at unit scale (test_round10_fixes); what only this tier
+    pinned at unit scale (test_streaming_ann_state); what only this tier
     exercises is the migration's cost-bearing paths on 50k vectors."""
     from syncmaven_spark.operators import ivfpq_append, ivfpq_probe
     from syncmaven_spark.session import load_tables

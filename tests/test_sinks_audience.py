@@ -5,7 +5,6 @@ import hashlib
 
 import pytest
 
-from syncmaven_spark.sinks.base import RateLimitError
 from syncmaven_spark.sinks.facebook_ads import FacebookAdsDestination, _email_sha256
 from syncmaven_spark.sinks.resend import ResendDestination
 from syncmaven_spark.sinks.twitter_ads import TwitterAdsDestination, fix_iso

@@ -291,3 +291,24 @@ def test_intercom_contact_company_association():
     assert client.gets == ["/companies?company_id=c1", "/companies?company_id=c2"]
     # the resolved map is persisted for the next run
     assert store.get(["syncId=s1", "companiesMap", "c1"]) == "co_c1"
+
+
+def test_hubspot_429_transparent_retry():
+    class RateLimitedHubspot(FakeHubspot):
+        def __init__(self):
+            super().__init__()
+            self.limited_once = False
+
+        def create(self, model, properties):
+            if not self.limited_once:
+                self.limited_once = True
+                raise RateLimitError("429", retry_after_ms=1)
+            return super().create(model, properties)
+
+    client = RateLimitedHubspot()
+    out = HubspotDestination().create_output_stream(
+        "contacts", {"_client": client}, "s1", InMemoryStore(), options={}
+    )
+    out.handle_row({"id": 1, "email": "a@b.c"})
+    assert out.stats.success == 1
+    assert client.objects["contacts"]  # created after the transparent retry

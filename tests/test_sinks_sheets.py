@@ -4,6 +4,7 @@ import datetime as dt
 
 import pytest
 
+from syncmaven_spark.runner import ModelDefinition, SyncDefinition, run_sync
 from syncmaven_spark.sinks.google_sheets import (
     GoogleSheetsDestination,
     format_date_for_sheets,
@@ -255,7 +256,6 @@ def test_streaming_append_through_run_sync(spark):
         SyncDefinition,
         run_sync,
     )
-    from syncmaven_spark.sinks.google_sheets import GoogleSheetsDestination
 
     client = FakeAppendSheets()
     spark.range(0, 7).selectExpr(
@@ -270,7 +270,6 @@ def test_streaming_append_through_run_sync(spark):
         options={"streamingAppend": True, "appendBatchSize": 3,
                  "sheetName": "Out"},
     )
-    from syncmaven_spark.state import InMemoryStore
 
     result = run_sync(spark, sync, InMemoryStore())
     assert result.stats.success == 7

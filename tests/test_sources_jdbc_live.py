@@ -25,7 +25,7 @@ from syncmaven_spark.runner import ModelDefinition, SyncDefinition, run_sync
 from syncmaven_spark.sources.registry import GenericJdbcSource, create_datasource
 from syncmaven_spark.state import InMemoryStore
 
-from tests.test_runner_golden import COLUMNS, PART1, PART2, _expected_line
+from tests.conftest import COLUMNS, PART1, PART2, _expected_line
 
 _SPARK_JARS = os.path.join(
     os.path.dirname(__import__("pyspark").__file__), "jars"

@@ -7,8 +7,11 @@ import shutil
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from syncmaven_spark.streaming import compact_state, run_streaming_near_dup_sync
+
+from tests.conftest import drop_latest_commit
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -206,19 +209,6 @@ def test_stale_checkpoint_fails_fast(spark, tmp_path):
         )
 
 
-def _drop_latest_commit(ckpt):
-    """Simulate a crash between state writes and the offset commit: remove
-    the latest commit marker (and its local-FS checksum shadow — leaving
-    the .crc behind makes the replay's rename fail with
-    FileAlreadyExistsException instead of replaying)."""
-    commits = os.path.join(ckpt, "commits")
-    latest = max((n for n in os.listdir(commits) if n.isdigit()), key=int)
-    os.remove(os.path.join(commits, latest))
-    crc = os.path.join(commits, f".{latest}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-
 def test_compaction_preserves_probe_results_and_replay(spark, tmp_path):
     """compact_state folds epoch dirs < up_to_epoch into one epoch=-1 base:
     (a) a later batch over compacted state yields EXACTLY the pairs the
@@ -268,7 +258,7 @@ def test_compaction_preserves_probe_results_and_replay(spark, tmp_path):
     # (b) replay the latest epoch on the compacted clone: drop its commit
     # marker (crash between state write and offset commit) and re-run
     before = sorted(pb)
-    _drop_latest_commit(ckpt_b)
+    drop_latest_commit(ckpt_b)
     run_streaming_near_dup_sync(spark, src, schema, state_b, ckpt_b, **kwargs)
     after = sorted(
         (r.id_a, r.id_b, r.jaccard) for r in _pairs(spark, state_b).collect()
@@ -906,3 +896,308 @@ def test_streaming_decontamination_containment_method(spark, tmp_path):
     assert {(r.train_id, r.bench_id) for r in cut.collect()} == {
         (1, 10), (2, 10)
     }
+
+
+def test_read_epoch_state_tolerates_footerless_epoch_dir(spark, tmp_path):
+    """An epoch dir with zero parquet footers —
+    written by the older layout for an all-unusable-rows batch — made
+    schema inference fail with UNABLE_TO_INFER_SCHEMA and permanently
+    wedged the stream. The read now passes the known schema explicitly."""
+    from syncmaven_spark.streaming.incremental import (
+        _id_bucket,
+        _read_epoch_state,
+    )
+
+    table = str(tmp_path / "sets")
+    os.makedirs(os.path.join(table, "epoch=0", "bucket=1"))
+    ddl = "doc_id long, _set array<bigint>"
+    empty = _read_epoch_state(spark, table, ["doc_id", "_set"], ddl, 1)
+    assert empty.count() == 0
+
+    # a later real epoch beside the footerless one still reads fine
+    spark.range(0, 20).select(
+        F.col("id").alias("doc_id"), F.array(F.col("id")).alias("_set")
+    ).withColumn("bucket", _id_bucket("doc_id", 8)).write.partitionBy(
+        "bucket"
+    ).parquet(os.path.join(table, "epoch=1"))
+    got = _read_epoch_state(spark, table, ["doc_id", "_set"], ddl, 2)
+    assert got.count() == 20
+
+
+def test_state_consumers_refuse_old_layout_and_pending_journal(
+    spark, tmp_path
+):
+    """Read_pairs and compact_state now enforce the same
+    layout version the drivers do, and read_pairs refuses a mid-surgery
+    state (pending compaction journal) instead of silently returning a
+    pairs table missing the folded epochs."""
+    import json
+
+    from syncmaven_spark.streaming import (
+        compact_state,
+        read_pairs,
+        run_streaming_near_dup_sync,
+    )
+
+    src, state, ckpt = (str(tmp_path / d) for d in ("src", "state", "ckpt"))
+    spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog tonight"),
+         (2, "the quick brown fox jumps over the lazy dog today")],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(src)
+    schema = spark.read.parquet(src).schema
+    run_streaming_near_dup_sync(
+        spark, src, schema, state, ckpt, threshold=0.3, max_bucket_size=None
+    )
+
+    # pending journal → read_pairs refuses
+    jpath = state + "/.compact_journal_pairs.json"
+    with open(jpath, "w") as f:
+        json.dump({"fold": [], "up_to": 0}, f)
+    with pytest.raises(ValueError, match="incomplete compaction"):
+        read_pairs(spark, state)
+    os.remove(jpath)
+    assert read_pairs(spark, state).count() >= 1
+
+    # old layout → both consumers refuse with the dedicated message
+    with open(state + "/recipe.json", encoding="utf-8") as f:
+        recipe = json.load(f)
+    recipe["layout"] = 2
+    with open(state + "/recipe.json", "w", encoding="utf-8") as f:
+        json.dump(recipe, f)
+    with pytest.raises(ValueError, match="older/different on-disk layout"):
+        read_pairs(spark, state)
+    with pytest.raises(ValueError, match="older/different on-disk layout"):
+        compact_state(spark, state, up_to_epoch=0)
+
+
+def test_decontamination_cap_pinned_across_runs(spark, tmp_path):
+    """The decon driver pins max_bucket_size in recipe.json on the first
+    run — a later run with a different cap would make epochs undetectably
+    incomplete (contamination past the cap is silently exempt) and fails
+    fast instead; a cap is never pinned retroactively."""
+    import json
+
+    from syncmaven_spark.streaming import (
+        prepare_decontamination_state,
+        run_streaming_decontamination_sync,
+    )
+
+    src, state, ckpt = (str(tmp_path / d) for d in ("src", "state", "ckpt"))
+    text = "the quick brown fox jumps over the lazy dog in the garden"
+    bench = spark.createDataFrame(
+        [(10, text)], "doc_id long, text string"
+    )
+    prepare_decontamination_state(spark, bench, state)
+    spark.createDataFrame(
+        [(1, text + " today")], "doc_id long, text string"
+    ).coalesce(1).write.mode("append").parquet(src)
+    schema = spark.read.parquet(src).schema
+    run_streaming_decontamination_sync(
+        spark, src, schema, state, ckpt, threshold=0.3
+    )
+    with open(state + "/recipe.json", encoding="utf-8") as f:
+        assert json.load(f)["max_bucket_size"] is None  # pinned on run 1
+
+    spark.createDataFrame(
+        [(2, text + " tomorrow")], "doc_id long, text string"
+    ).coalesce(1).write.mode("append").parquet(src)
+    with pytest.raises(ValueError, match="max_bucket_size"):
+        run_streaming_decontamination_sync(
+            spark, src, schema, state, ckpt, threshold=0.3,
+            max_bucket_size=5,
+        )
+    # the pinned cap still runs
+    run_streaming_decontamination_sync(
+        spark, src, schema, state, ckpt, threshold=0.3
+    )
+    got = {
+        (r.train_id, r.bench_id)
+        for r in spark.read.parquet(state + "/pairs").collect()
+    }
+    assert got == {(1, 10), (2, 10)}
+
+    # a state whose epochs were mined WITHOUT a recorded cap was mined under
+    # an unknown cap: the next run must not bless its own cap as the history
+    with open(state + "/recipe.json", encoding="utf-8") as f:
+        recipe = json.load(f)
+    del recipe["max_bucket_size"]
+    with open(state + "/recipe.json", "w", encoding="utf-8") as f:
+        json.dump(recipe, f)
+    spark.createDataFrame(
+        [(3, text + " later")], "doc_id long, text string"
+    ).coalesce(1).write.mode("append").parquet(src)
+    with pytest.raises(ValueError, match="unknown"):
+        run_streaming_decontamination_sync(
+            spark, src, schema, state, ckpt, threshold=0.3
+        )
+
+
+def test_decontamination_method_pin_legacy_and_cap_scoping(spark, tmp_path):
+    """A pre-'method' state resumes as jaccard (the only
+    metric that existed — no pointless rebuild), a containment run
+    against it still fails fast, and the bucket cap is NOT pinned/checked
+    under containment (it has no bucket stage — refusing runs over a
+    no-op knob)."""
+    import json
+
+    from syncmaven_spark.streaming import (
+        prepare_decontamination_state,
+        run_streaming_decontamination_sync,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog in the garden"
+    bench = spark.createDataFrame([(10, text)], "doc_id long, text string")
+
+    # legacy state: mined, then 'method' stripped from the recipe
+    src, state, ckpt = (str(tmp_path / d) for d in ("src", "state", "ckpt"))
+    prepare_decontamination_state(spark, bench, state)
+    spark.createDataFrame(
+        [(1, text + " now")], "doc_id long, text string"
+    ).coalesce(1).write.mode("append").parquet(src)
+    schema = spark.read.parquet(src).schema
+    run_streaming_decontamination_sync(
+        spark, src, schema, state, ckpt, threshold=0.3
+    )
+    with open(state + "/recipe.json", encoding="utf-8") as f:
+        recipe = json.load(f)
+    del recipe["method"]
+    with open(state + "/recipe.json", "w", encoding="utf-8") as f:
+        json.dump(recipe, f)
+
+    # containment against the legacy-jaccard history fails fast...
+    spark.createDataFrame(
+        [(2, text + " later")], "doc_id long, text string"
+    ).coalesce(1).write.mode("append").parquet(src)
+    with pytest.raises(ValueError, match="mined with method='jaccard'"):
+        run_streaming_decontamination_sync(
+            spark, src, schema, state, ckpt,
+            threshold=0.3, method="containment",
+        )
+    # ...while a jaccard resume re-pins the knowable historical value
+    run_streaming_decontamination_sync(
+        spark, src, schema, state, ckpt, threshold=0.3
+    )
+    with open(state + "/recipe.json", encoding="utf-8") as f:
+        assert json.load(f)["method"] == "jaccard"
+
+    # containment state: the cap is a no-op knob, never pinned/refused
+    src2, state2, ckpt2 = (
+        str(tmp_path / d) for d in ("src2", "state2", "ckpt2")
+    )
+    prepare_decontamination_state(spark, bench, state2)
+    spark.createDataFrame(
+        [(1, text + " x")], "doc_id long, text string"
+    ).coalesce(1).write.mode("append").parquet(src2)
+    schema2 = spark.read.parquet(src2).schema
+    kw = dict(threshold=0.3, method="containment")
+    run_streaming_decontamination_sync(
+        spark, src2, schema2, state2, ckpt2, **kw
+    )
+    with open(state2 + "/recipe.json", encoding="utf-8") as f:
+        assert "max_bucket_size" not in json.load(f)
+    spark.createDataFrame(
+        [(2, text + " y")], "doc_id long, text string"
+    ).coalesce(1).write.mode("append").parquet(src2)
+    run_streaming_decontamination_sync(
+        spark, src2, schema2, state2, ckpt2, max_bucket_size=200, **kw
+    )
+    got = {
+        (r.train_id, r.bench_id)
+        for r in spark.read.parquet(state2 + "/pairs").collect()
+    }
+    assert got == {(1, 10), (2, 10)}
+
+
+def test_merge_tmp_into_base_recovers_any_interruption_point(tmp_path):
+    """_merge_tmp_into_base must be resumable from ANY prefix of its file
+    moves: files already moved are no longer in tmp, never-moved files
+    still are, and a re-run completes the merge with nothing lost or
+    duplicated."""
+    from syncmaven_spark.streaming.incremental import _merge_tmp_into_base
+
+    def build_tmp(root):
+        files = []
+        for part in ("hbucket=0", "hbucket=3"):
+            d = root / part
+            d.mkdir(parents=True)
+            for i in range(3):
+                p = d / f"part-{part[-1]}{i}-uuid.parquet"
+                p.write_text(f"{part}/{i}")
+                files.append((part, p.name, f"{part}/{i}"))
+        (root / "_SUCCESS").write_text("")
+        (root / ".part-crc").write_text("")
+        return files
+
+    import itertools
+
+    for k in range(0, 7):  # interrupt after k of the 6 file moves
+        tmp = tmp_path / f"tmp{k}"
+        base = tmp_path / f"base{k}"
+        files = build_tmp(tmp)
+        # pre-existing base content from an earlier compaction must
+        # survive untouched
+        (base / "hbucket=0").mkdir(parents=True)
+        (base / "hbucket=0" / "part-old.parquet").write_text("old")
+        # simulate a crash: k files already moved (atomic renames)
+        for part, name, _ in itertools.islice(files, k):
+            os.makedirs(base / part, exist_ok=True)
+            os.replace(tmp / part / name, base / part / name)
+        _merge_tmp_into_base(str(tmp), str(base))
+        assert not tmp.exists()
+        got = {
+            (os.path.relpath(os.path.join(r, f), base))
+            for r, _, fs in os.walk(base)
+            for f in fs
+        }
+        want = {os.path.join(p, n) for p, n, _ in files} | {
+            os.path.join("hbucket=0", "part-old.parquet")
+        }
+        assert got == want, (k, got ^ want)
+        assert (base / "hbucket=0" / "part-old.parquet").read_text() == "old"
+        for part, name, content in files:
+            assert (base / part / name).read_text() == content
+        shutil.rmtree(base)
+
+
+def test_read_pairs_simhash_direction_flip(spark, tmp_path):
+    """For the simhash family the recorded per-epoch value is max_hamming
+    and the completeness direction FLIPS: an epoch mined with a SMALLER
+    bound never emitted pairs in (bound, requested], so it is the
+    incomplete one; pairs filter as hamming <= requested."""
+    from syncmaven_spark.streaming import (
+        read_pairs,
+        run_streaming_near_dup_sync,
+    )
+
+    base_text = "the quick brown fox jumps over the lazy dog tonight"
+    src, state, ckpt = (str(tmp_path / d) for d in ("src", "state", "ckpt"))
+
+    def write(rows):
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.mode("append").parquet(src)
+
+    # max_hamming is part of the RECIPE for simhash (it fixes the chunk
+    # layout), so unlike jaccard/cosine thresholds it cannot vary between
+    # epochs — the direction flip matters when the requested cut exceeds
+    # the constant recorded bound
+    kwargs = dict(family="simhash", max_hamming=8, max_bucket_size=None)
+    write([(1, base_text), (2, base_text + " extra tail words here")])
+    schema = spark.read.parquet(src).schema
+    run_streaming_near_dup_sync(spark, src, schema, state, ckpt, **kwargs)
+    write([(3, base_text)])  # token-identical to 1 → hamming 0
+    run_streaming_near_dup_sync(spark, src, schema, state, ckpt, **kwargs)
+
+    # cut at 2: both epochs mined with max_hamming 8 >= 2 → complete;
+    # pairs filter hamming <= 2 (NOT >= — the flipped direction)
+    cut = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in read_pairs(spark, state, 2).collect()
+    }
+    assert all(h <= 2 for _, _, h in cut)
+    assert (1, 3, 0) in cut
+    # cut at 10: epochs were mined at 8 < 10 → pairs with hamming in
+    # (8, 10] were never emitted → incomplete, refuse
+    with pytest.raises(ValueError, match="mined at 8"):
+        read_pairs(spark, state, 10)

@@ -1,7 +1,7 @@
 """End-to-end type-surface coverage for the sync loop.
 
-Round-5 probing found two crashes reachable only end-to-end (Decimal and
-bytearray rows through the parity encoder — see test_review_regressions);
+Decimal cursors and bytearray (BinaryType) rows each crashed only
+end-to-end, in the parity encoder (test_review_regressions pins both);
 these tests pin the rest of the probed surface so new row/cursor types
 keep working through the WHOLE loop: query compile, cursor persistence,
 validation, and sink serialization.
