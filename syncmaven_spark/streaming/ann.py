@@ -65,13 +65,16 @@ from syncmaven_spark.streaming.incremental import (
     DEFAULT_STATE_BUCKETS,
     STATE_LAYOUT_VERSION,
     _atomic_write_json,
+    _bucket_values,
     _guard_state_consistency,
     _id_bucket,
     _load_json,
     _read_epoch_state,
     _refuse_pending_compaction,
     _require_layout,
-    maybe_compact,
+    _run_epochs,
+    _spark_threads,
+    _write_keyed,
 )
 
 log = logging.getLogger("syncmaven_spark.streaming.ann")
@@ -246,60 +249,37 @@ def prepare_ann_state(
     # the three artifact writes are independent jobs into the disposable
     # tmp dir — submitted together so the store write's tail back-fills
     # with the two (tiny, commit-dominated) codebook writes instead of
-    # paying three sequential job barriers (guide §2.6 overlap
-    # independent jobs); .result() re-raises the first failure and the
-    # pool exit waits out the rest, so a failed prepare still leaves only
-    # the disposable tmp
-    from concurrent.futures import ThreadPoolExecutor
-
-    # Keyed-by-cell repartition before the store's partitionBy (round-11
-    # verdict #3 — the same (input partitions × cells) file explosion
-    # fixed for the id sidecar): the probe's pruning unit is the cell
-    # directory, so ~one file per cell is the optimal read shape. The
-    # shuffle moves only the ENCODED rows (id, cell, m smallints), never
-    # the vectors — the assign/encode UDFs run map-side before it — and
-    # the keyed form has no explicit count, so AQE sizes the write tasks
-    # (a tiny corpus collapses to one task, a 100-TB one fans out).
-    # the derived-bucket row count rides the store write as an observed
-    # metric (round-12): the write materializes every row anyway, so a
-    # separate read-back count job — even the metadata-only one — was one
-    # more driver barrier per prepare for a number the write already knows
+    # paying three sequential job barriers; a failed prepare still leaves
+    # only the disposable tmp. The store is keyed by cell: the probe's
+    # pruning unit is the cell directory, and the shuffle moves only the
+    # ENCODED rows (id, cell, m smallints) — the assign/encode UDFs run
+    # map-side before it. The derived-bucket row count rides the store
+    # write as an observed metric (round-12): the write materializes
+    # every row anyway, so a read-back count job would be one more driver
+    # barrier per prepare for a number the write already knows.
     from pyspark.sql import Observation
 
     store_obs = Observation("prepare_ann_store_rows")
-    store_writer = (
-        cells_codes.observe(store_obs, F.count(F.lit(1)).alias("n"))
-        .repartition("cell")
-        .write.partitionBy("cell")
-    )
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [
-            pool.submit(store_writer.parquet, store_base),
-            pool.submit(
-                centroids_df.write.parquet, os.path.join(tmp, "centroids")
-            ),
-            pool.submit(
-                codebooks_df.write.parquet, os.path.join(tmp, "codebooks")
-            ),
-        ]
-        for f in futures:
-            f.result()
+    _write_keyed(spark, [
+        (cells_codes.observe(store_obs, F.count(F.lit(1)).alias("n")),
+         "cell", store_base),
+        (centroids_df, None, os.path.join(tmp, "centroids")),
+        (codebooks_df, None, os.path.join(tmp, "codebooks")),
+    ])
     if state_buckets is None:
         state_buckets = _derive_state_buckets(int(store_obs.get["n"]))
     state_buckets = int(state_buckets)
     # the id sidecar derives from the WRITTEN store (a column-pruned read
     # of m-smallint rows' id column), not from cells_codes — re-selecting
-    # the unpersisted lineage would re-run the whole encode UDF pass.
-    # Repartitioned BY BUCKET before the write: an unshuffled partitionBy
-    # writes (input partitions × touched buckets) files — the guard's
-    # pruning unit is the bucket, so one file per bucket is the optimal
-    # read shape, and state_buckets is the knob that scales it with the
-    # corpus (round-11: the prepare wrote 8×32 small files here).
-    spark.read.parquet(store_base).select(id_col).withColumn(
-        "ibucket", _id_bucket(id_col, state_buckets)
-    ).repartition(state_buckets, "ibucket").write.partitionBy(
-        "ibucket"
-    ).parquet(os.path.join(tmp, "ids", f"epoch={BASE_EPOCH}"))
+    # the unpersisted lineage would re-run the whole encode UDF pass. It
+    # is keyed by bucket, the guard's pruning unit, and state_buckets is
+    # the knob that scales it with the corpus.
+    _write_keyed(spark, [(
+        spark.read.parquet(store_base).select(id_col).withColumn(
+            "ibucket", _id_bucket(id_col, state_buckets)
+        ),
+        "ibucket", os.path.join(tmp, "ids", f"epoch={BASE_EPOCH}"),
+    )])
     # both recipes come from the artifacts' own stamps — metadata reads,
     # no job (round-11: load_pq_codebooks here re-collected the codebook
     # table purely to recompute the checksum pq_train just stamped)
@@ -374,15 +354,12 @@ def _load_ann_state(
     centroids_df = spark.read.parquet(os.path.join(state_dir, "centroids"))
     codebooks_df = spark.read.parquet(os.path.join(state_dir, "codebooks"))
     # the two validation collects are independent single-partition reads
-    # of tiny artifact tables — submitted together (guide §2.6) so one
-    # state open pays one job round-trip of latency, not two. Error
-    # precedence is unchanged: ivf's result is consulted first, exactly
-    # as the sequential layout raised.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        ivf_future = pool.submit(_load_codebook, centroids_df)
-        pq_future = pool.submit(load_pq_codebooks, codebooks_df)
+    # of tiny artifact tables — submitted together so one state open pays
+    # one job round-trip of latency, not two. Error precedence is
+    # unchanged: ivf's result is consulted first.
+    with _spark_threads(spark) as submit:
+        ivf_future = submit(_load_codebook, centroids_df)
+        pq_future = submit(load_pq_codebooks, codebooks_df)
         ivf_loaded = ivf_future.result()
         pq_loaded = pq_future.result()
     if (
@@ -991,8 +968,11 @@ def run_streaming_ann_sync(
     retrain_on_trend: dict | None = None,
 ) -> None:
     """Continuously ingest a growing parquet directory of embeddings into
-    a prepared IVF-PQ state (``availableNow`` trigger — process everything
-    new, then stop; re-running picks up later files).
+    a prepared IVF-PQ state. The replay guard, the watermark commit, crash
+    safety, the ``compact_every_n_epochs`` /
+    ``deep_compact_max_partition_files`` cadence (folding the ``store``
+    and ``ids`` epoch dirs) and the filesystem contract are the epoch
+    engine's (:func:`~syncmaven_spark.streaming.incremental._run_epochs`).
 
     The codebooks are verified against the prepare-time checksums ONCE
     at startup and the collected matrices are frozen for the run — every
@@ -1014,11 +994,9 @@ def run_streaming_ann_sync(
     reconstruction degrades — they measure different halves of the
     quantizer) — and record them per epoch in ``epochs.json``, then
     append the batch's ``(id, cell, codes)`` rows under
-    ``store/epoch=<id>`` and its ids under ``ids/epoch=<id>`` with
-    ``mode("overwrite")`` — the same replay-idempotence contract as
-    every other family driver (a replayed epoch rewrites its own dirs,
-    and the disjointness read excludes the current epoch so the replay
-    does not collide with itself).
+    ``store/epoch=<id>`` and its ids under ``ids/epoch=<id>`` (the
+    disjointness read excludes the current epoch, so a replay does not
+    collide with itself).
 
     ``min_mean_cell_cos`` / ``min_mean_recon_cos`` turn the drift record
     into hard gates: a batch whose mean assigned-cell (resp.
@@ -1028,12 +1006,6 @@ def run_streaming_ann_sync(
     The remedy is :func:`reindex_ann_state` into a fresh state (the
     recorded per-epoch drift history shows when the slide started).
     Leave them ``None`` to record-only.
-
-    ``compact_every_n_epochs`` opts into the same automatic
-    :func:`~syncmaven_spark.streaming.incremental.maybe_compact` cadence
-    as the near-dup drivers (folds ``store``/``ids`` epoch dirs into the
-    base after the epoch commit; ``deep_compact_max_partition_files``
-    escalates the tripped table(s) to the deep base rewrite).
 
     ``drift_tail_epochs`` bounds the live drift tail kept in
     ``epochs.json``: once the tail exceeds it, the oldest records roll
@@ -1089,7 +1061,6 @@ def run_streaming_ann_sync(
     residual = recipe.get("encode") == "residual"
     store_dir = os.path.join(state_dir, "store")
     ids_dir = os.path.join(state_dir, "ids")
-    epochs_path = os.path.join(state_dir, "epochs.json")
     id_type = schema[id_col].dataType.simpleString()
     state_buckets = recipe.get("state_buckets")
     if state_buckets is None:
@@ -1106,36 +1077,7 @@ def run_streaming_ann_sync(
         )
     state_buckets = int(state_buckets)
 
-    def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        epochs = _load_json(epochs_path) or {}
-        max_seen = epochs.get("max_epoch")
-        if max_seen is not None and int(epoch_id) < int(max_seen):
-            raise ValueError(
-                f"run_streaming_ann_sync: batch arrived with epoch "
-                f"{epoch_id} but state at {state_dir!r} has already "
-                f"processed epoch {max_seen} — the streaming checkpoint "
-                "was recreated over surviving state, so the source would "
-                "be re-delivered from epoch 0 and re-append stored ids. "
-                "Restore the original checkpoint, or start a fresh "
-                "state_dir + checkpoint."
-            )
-
-        def _advance(extra: dict | None = None) -> None:
-            payload = {**epochs, "max_epoch": int(epoch_id)}
-            if extra:
-                drift = dict(epochs.get("drift") or {})
-                drift[str(int(epoch_id))] = extra
-                if len(drift) > drift_tail_epochs:
-                    # bound the per-batch rewrite: oldest records roll
-                    # into an append-only drift/live segment (the trend
-                    # stays whole through read_ann_drift)
-                    drift = _roll_drift_segments(
-                        os.path.join(state_dir, "drift", "live"),
-                        drift, drift_tail_epochs,
-                    )
-                payload["drift"] = drift
-            _atomic_write_json(epochs_path, payload)
-
+    def process(batch_df: DataFrame, epoch_id: int, epochs: dict) -> dict | None:
         # persisted: the batch feeds the bucket probe, the guard
         # semi-join and the assignment scan — unpersisted it would
         # re-read the source parquet per action
@@ -1145,54 +1087,35 @@ def run_streaming_ann_sync(
             # epochs < current only (the base at -1 qualifies): a replayed
             # epoch must not collide with its own prior write. The read is
             # PRUNED to the batch's own id-bucket partitions of the ids/
-            # sidecar (≤ state_buckets ints collected from the persisted
-            # batch): a colliding stored id necessarily shares its bucket
+            # sidecar: a colliding stored id necessarily shares its bucket
             # with the batch id, so the excluded partitions cannot
             # contribute — per batch the guard reads O(touched buckets),
             # not O(store ids) (round-9 verdict #1). The bucket collect
             # doubles as the emptiness probe (xxhash64 maps even a NULL
-            # id to its seed, so every batch row yields a bucket) —
-            # round-11: the separate isEmpty action was one more job.
-            ib_vals = [
-                r[0]
-                for r in batch.select(
-                    _id_bucket(id_col, state_buckets).alias("b")
-                ).distinct().collect()
-            ]
+            # id to its seed, so every batch row yields a bucket).
+            ib_vals = _bucket_values(batch, _id_bucket(id_col, state_buckets))
             if not ib_vals:
-                _advance()
-                return
+                return None
             stored = _read_epoch_state(
                 spark, ids_dir, [id_col], f"{id_col} {id_type}", epoch_id,
                 bucket_vals=ib_vals, bucket_col="ibucket",
             )
         elif batch.isEmpty():
-            _advance()
-            return
+            return None
 
-        # the id-guard collect (below) and the drift aggregation are
-        # independent jobs over the persisted batch — the guard job is
-        # submitted here so it runs WHILE the drift job runs (guide §2.6
-        # overlap independent jobs; measured ~0.3 s/epoch of pure barrier
-        # time). Error semantics are unchanged: the drift gates are still
-        # evaluated FIRST (a batch tripping both a gate and the guard
-        # reports the gate, as the sequential layout did), the guard
-        # future is only consulted after them, and the all-unusable-rows
-        # path discards the guard result entirely (the sequential layout
-        # returned before ever running the guard there).
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=2)
-        guard_future = None
-        try:
+        # the id-guard collect and the drift aggregation are independent
+        # jobs over the persisted batch — the guard job runs WHILE the
+        # drift job runs (measured ~0.3 s/epoch of pure barrier time).
+        # Error order: the drift gates are evaluated FIRST (a batch
+        # tripping both a gate and the guard reports the gate), the guard
+        # future only after them, and the all-unusable-rows path discards
+        # the guard result entirely.
+        with _spark_threads(spark) as submit:
+            guard = None
             if stored is not None:
-                # BOTH id guards in ONE job (round-11: the semi-join
-                # collision probe and the in-batch duplicate probe each
-                # paid a separate job round-trip per epoch; a union of the
-                # two limit(1) branches runs them as one collect).
-                # Collision precedence and both error messages are
-                # unchanged — the collision text is
-                # _check_new_ids_disjoint's verbatim.
+                # BOTH id guards in ONE job: a union of the semi-join
+                # collision probe and the in-batch duplicate probe, each
+                # limit(1), runs as one collect (round-11)
                 collide = (
                     batch.select(F.col(id_col).alias("_bad_id"))
                     .join(
@@ -1210,10 +1133,8 @@ def run_streaming_ann_sync(
                     .select("_bad_id", F.lit("dup").alias("_why"))
                 )
                 probe = collide.unionByName(dup)
-                guard_future = pool.submit(
-                    lambda: {
-                        r["_why"]: r["_bad_id"] for r in probe.collect()
-                    }
+                guard = submit(
+                    lambda: {r["_why"]: r["_bad_id"] for r in probe.collect()}
                 )
 
             # ONE assignment pass per batch: drift reads these rows, and
@@ -1225,45 +1146,34 @@ def run_streaming_ann_sync(
                     _loaded=ivf_loaded,
                 )
             )
-            # BOTH retrain-signal halves, computed on the BATCH only
-            # (bounded) in ONE aggregation job (round-11: ivf_drift +
-            # pq_drift_assigned as two separate .first() jobs re-scanned
-            # the persisted batch and paid two job round-trips per epoch;
-            # the per-row expressions and the agg layout are identical, so
-            # the recorded values are unchanged): how well does the frozen
-            # coarse codebook still represent incoming vectors (cell
-            # cos), and how well do the frozen PQ codebooks still
-            # RECONSTRUCT them (recon cos — round-9 verdict #2; cell
-            # assignment can stay healthy while ADC quality degrades).
-            # Recorded per epoch; optionally hard gates.
+            # BOTH retrain-signal halves, computed on the BATCH only in
+            # ONE aggregation job: how well the frozen coarse codebook
+            # still represents incoming vectors (cell cos), and how well
+            # the frozen PQ codebooks still RECONSTRUCT them (recon cos —
+            # cell assignment can stay healthy while ADC quality degrades)
             drift = _epoch_drift_record(
                 assigned, ivf_loaded, pq_loaded, residual
             )
             if drift["n_vectors"] == 0:
                 # all rows unusable (null/non-finite vectors) — nothing to
-                # append; advance the watermark like the empty-batch path.
-                # The sequential layout returned before ever running the
-                # id guard here, so the in-flight guard job's result AND
-                # any error it hit are discarded to match — but LOG the
-                # error (round-11 advice): a genuine infrastructure
-                # failure (unreadable ids sidecar, executor loss) should
-                # not vanish silently just because this batch had nothing
-                # to guard.
-                if guard_future is not None:
+                # append. The guard's result AND any error it hit are
+                # discarded (this batch had nothing to guard), but the
+                # error is LOGGED: a genuine infrastructure failure
+                # (unreadable ids sidecar, executor loss) must not vanish
+                # silently (round-11 advice).
+                if guard is not None:
                     try:
-                        guard_future.result()
+                        guard.result()
                     except Exception:
                         log.warning(
                             "run_streaming_ann_sync: epoch %s — discarding "
                             "the in-flight id-guard job's error (all batch "
-                            "rows were unusable, so the sequential layout "
-                            "never ran the guard here); the suppressed "
-                            "error was:",
+                            "rows were unusable, so there was nothing to "
+                            "guard); the suppressed error was:",
                             epoch_id,
                             exc_info=True,
                         )
-                _advance()
-                return
+                return None
             if (
                 min_mean_cell_cos is not None
                 and drift["mean_cell_cos"] is not None
@@ -1295,12 +1205,12 @@ def run_streaming_ann_sync(
                     "stream, or lower/remove the gate to "
                     "record-and-continue."
                 )
+            # the live drift tail with this epoch's record: the trend
+            # gate's input and the commit's "drift" key
+            tail = {**(epochs.get("drift") or {}), str(epoch_id): drift}
             if retrain_on_trend is not None:
-                # the trend gate: live tail + this epoch's record, pure
-                # driver arithmetic (window <= drift_tail_epochs was
+                # pure driver arithmetic (window <= drift_tail_epochs was
                 # validated, so the tail always holds the whole window)
-                tail = dict(epochs.get("drift") or {})
-                tail[str(int(epoch_id))] = drift
                 rec = _recommend_from_records(
                     sorted((int(e), r) for e, r in tail.items()),
                     **retrain_on_trend,
@@ -1323,9 +1233,8 @@ def run_streaming_ann_sync(
                         "the stream, or remove retrain_on_trend to "
                         "record-and-continue."
                     )
-
-            if guard_future is not None:
-                hits = guard_future.result()
+            if guard is not None:
+                hits = guard.result()
                 if "collide" in hits:
                     raise ValueError(
                         f"run_streaming_ann_sync: new batch re-ingests id "
@@ -1348,77 +1257,36 @@ def run_streaming_ann_sync(
                         "the "
                         "source files."
                     )
-            rows = ivfpq_encode_assigned(
-                assigned, centroids_df, codebooks_df,
-                id_col=id_col, encode_residuals=residual, _loaded=loaded,
-            )
-            # the store write and the id-sidecar write are independent
-            # idempotent overwrites of this epoch's own directories —
-            # submitted together so their (commit-dominated) job costs
-            # overlap. The crash window gains the {ids-only} subset
-            # beside the sequential layout's {store-only}: both are
-            # pre-watermark states a replay overwrites wholesale, and
-            # the guard's epoch < current filter never reads the
-            # half-written current epoch, so recovery semantics are
-            # unchanged.
-            # keyed-by-cell like the prepare-time base write: one file
-            # per touched cell instead of (batch partitions × cells);
-            # the shuffle carries only (id, cell, codes) rows and AQE
-            # coalesces a tiny micro-batch to one task
-            store_writer = (
-                rows.repartition("cell").write.partitionBy("cell")
-                .mode("overwrite")
-            )
-            # the epoch's id-sidecar rows (from the persisted assignment
-            # table — exactly the ids the store now holds), id-bucketed
-            # so future guards prune to touched buckets; overwrite keeps
-            # replays idempotent like the store write. Keyed-by-bucket
-            # repartition (AQE-coalescible — no explicit count, so a
-            # tiny micro-batch collapses to one task) bounds the write
-            # to one file per touched bucket instead of (batch
-            # partitions × buckets).
-            ids_writer = (
-                assigned.select(id_col)
-                .withColumn("ibucket", _id_bucket(id_col, state_buckets))
-                .repartition("ibucket")
-                .write.partitionBy("ibucket")
-                .mode("overwrite")
-            )
-            write_futures = [
-                pool.submit(
-                    store_writer.parquet,
-                    os.path.join(store_dir, f"epoch={int(epoch_id)}"),
+        rows = ivfpq_encode_assigned(
+            assigned, centroids_df, codebooks_df,
+            id_col=id_col, encode_residuals=residual, _loaded=loaded,
+        )
+        # the store rows keyed by cell (the probe's pruning unit) and the
+        # epoch's id-sidecar rows (from the persisted assignment table —
+        # exactly the ids the store now holds) keyed by bucket, so future
+        # guards prune to touched buckets
+        epoch = f"epoch={epoch_id}"
+        _write_keyed(spark, [
+            (rows, "cell", os.path.join(store_dir, epoch)),
+            (
+                assigned.select(id_col).withColumn(
+                    "ibucket", _id_bucket(id_col, state_buckets)
                 ),
-                pool.submit(
-                    ids_writer.parquet,
-                    os.path.join(ids_dir, f"epoch={int(epoch_id)}"),
-                ),
-            ]
-            for f in write_futures:
-                f.result()
-        finally:
-            # waits out any in-flight job before an error propagates, so
-            # a raising gate never leaves a thread still driving Spark
-            # against a state the caller is about to tear down
-            pool.shutdown(wait=True)
-        _advance(extra=drift)
-        # opt-in compaction cadence, after the epoch commit (the same
-        # placement contract as the near-dup drivers)
-        if compact_every_n_epochs is not None:
-            maybe_compact(
-                spark, state_dir,
-                every_n_epochs=compact_every_n_epochs,
-                deep_when_max_partition_files=(
-                    deep_compact_max_partition_files
-                ),
+                "ibucket", os.path.join(ids_dir, epoch),
+            ),
+        ])
+        if len(tail) > drift_tail_epochs:
+            # bound the per-batch rewrite: oldest records roll into an
+            # append-only drift/live segment (the trend stays whole
+            # through read_ann_drift)
+            tail = _roll_drift_segments(
+                os.path.join(state_dir, "drift", "live"),
+                tail, drift_tail_epochs,
             )
+        return {"drift": tail}
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_epochs(
+        spark, source_dir, schema, state_dir, checkpoint_dir,
+        "run_streaming_ann_sync", process,
+        compact_every_n_epochs, deep_compact_max_partition_files,
     )
-    q.awaitTermination()

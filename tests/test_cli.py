@@ -5,6 +5,7 @@ import json
 import pytest
 
 from syncmaven_spark import cli
+from tests.conftest import SF_SMOKE
 
 
 def test_streams_verb(capsys):
@@ -32,7 +33,7 @@ def test_ad_hoc_sync_and_preview(tmp_path, capsys, spark):
             "--credentials",
             json.dumps({"filename": str(out_file)}),
             "--sf-dir",
-            "/root/testdata/sf0.001",
+            SF_SMOKE,
         ]
     )
     assert rc == 0
@@ -52,7 +53,7 @@ def test_project_sync_via_cli(tmp_path, capsys, spark):
         f"    filename: {out_file}\n"
     )
     rc = cli.main(
-        ["sync", str(tmp_path), "--sf-dir", "/root/testdata/sf0.001",
+        ["sync", str(tmp_path), "--sf-dir", SF_SMOKE,
          "--state", str(tmp_path / ".state")]
     )
     assert rc == 0
@@ -76,7 +77,7 @@ def test_sync_failure_isolated_nonzero_exit(tmp_path, capsys, spark):
 
 def test_explain_catalog_query(capsys, spark):
     rc = cli.main(
-        ["explain", "q:rel_pricing_summary", "--sf-dir", "/root/testdata/sf0.001"]
+        ["explain", "q:rel_pricing_summary", "--sf-dir", SF_SMOKE]
     )
     assert rc == 0
     out = capsys.readouterr().out
@@ -93,7 +94,7 @@ def test_explain_project_model(tmp_path, capsys, spark):
         "select event_id, ts from events where event_id >= 10"
     )
     rc = cli.main(
-        ["explain", str(tmp_path), "ev", "--sf-dir", "/root/testdata/sf0.001"]
+        ["explain", str(tmp_path), "ev", "--sf-dir", SF_SMOKE]
     )
     assert rc == 0
     assert "Physical Plan" in capsys.readouterr().out
@@ -149,7 +150,7 @@ def test_connector_dev_two_phase_incremental(tmp_path, capsys, spark):
 
     rc = cli.main(
         ["connector-dev", "--model-file", str(model), "--connection-file",
-         str(conn1), "--state", state, "--sf-dir", "/root/testdata/sf0.001"]
+         str(conn1), "--state", state, "--sf-dir", SF_SMOKE]
     )
     assert rc == 0
     first_lines = out1.read_text().splitlines()
@@ -161,7 +162,7 @@ def test_connector_dev_two_phase_incremental(tmp_path, capsys, spark):
     conn2.write_text(f"package: file\ncredentials:\n  filename: {out2}\n")
     rc = cli.main(
         ["connector-dev", "--model-file", str(model), "--connection-file",
-         str(conn2), "--state", state, "--sf-dir", "/root/testdata/sf0.001"]
+         str(conn2), "--state", state, "--sf-dir", SF_SMOKE]
     )
     assert rc == 0
     second = [json.loads(line) for line in out2.read_text().splitlines()]
@@ -185,7 +186,7 @@ def test_distributed_sync_via_cli(tmp_path, capsys, spark):
         f"    directory: {out_dir}\n"
     )
     rc = cli.main(
-        ["sync", str(tmp_path), "--sf-dir", "/root/testdata/sf0.001",
+        ["sync", str(tmp_path), "--sf-dir", SF_SMOKE,
          "--state", "memory://", "--distributed", "--chunks", "4"]
     )
     assert rc == 0

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from syncmaven_spark.operators import cosine_pairs_exact, cosine_pairs_lsh
+from tests.conftest import SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -70,7 +71,7 @@ def test_incremental_cosine_lsh_equals_full_pass_on_union(spark):
     from syncmaven_spark.session import load_tables
 
     emb = load_tables(
-        spark, "/root/testdata/sf0.001", register_views=False
+        spark, SF_SMOKE, register_views=False
     )["embeddings"]
     new = emb.filter("vec_id % 5 = 0")
     old = emb.filter("vec_id % 5 <> 0")

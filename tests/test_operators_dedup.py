@@ -10,6 +10,7 @@ from syncmaven_spark.operators import (
     simhash,
     simhash_near_dups,
 )
+from tests.conftest import SF_SMOKE
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches from "
@@ -205,7 +206,7 @@ def test_incremental_lsh_candidates_equal_full_pass_on_union(spark):
     from syncmaven_spark.session import load_tables
 
     docs = load_tables(
-        spark, "/root/testdata/sf0.001", register_views=False
+        spark, SF_SMOKE, register_views=False
     )["documents"]
     new = docs.filter("doc_id % 5 = 0")
     old = docs.filter("doc_id % 5 <> 0")
@@ -265,7 +266,7 @@ def test_incremental_simhash_equals_full_pass_on_union(spark):
     from syncmaven_spark.session import load_tables
 
     docs = load_tables(
-        spark, "/root/testdata/sf0.001", register_views=False
+        spark, SF_SMOKE, register_views=False
     )["documents"]
     # mirror the corpus so hamming-0 pairs exist by construction
     mirrored = docs.select("doc_id", "text").union(

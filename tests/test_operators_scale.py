@@ -103,3 +103,39 @@ def test_salted_aggregate_rejects_non_decomposable(spark, hotkeys):
 
     with pytest.raises(ValueError, match="non-decomposable"):
         salted_aggregate(hotkeys, ["k"], {"a": ("avg", "v")})
+
+
+def test_salted_join_rejects_right_outer_and_spreads_duplicates(spark):
+    """Right/full outer emits spurious NULL-padded rows
+    under salting (reject); and byte-identical hot rows must spread over
+    salts (a content-hash salt put them all on one)."""
+    import pytest as _pytest
+
+
+    left = spark.createDataFrame([("k", 1)] * 64, "key string, v int")
+    right = spark.createDataFrame([("k", 9)], "key string, w int")
+    with _pytest.raises(ValueError, match="inner/left"):
+        salted_join(left, right, "key", how="right")
+    out = salted_join(left, right, "key", factor=8)
+    assert out.count() == 64  # equivalent to the plain join
+    salts = (
+        left.withColumn("_s", __import__("pyspark").sql.functions.floor(
+            __import__("pyspark").sql.functions.rand(0x5A17) * 8))
+        .select("_s").distinct().count()
+    )
+    assert salts > 1  # identical rows land on multiple salts
+
+
+def test_salted_ops_reject_preexisting_salt_column(spark):
+    """An input already carrying '_salt' was
+    silently overwritten (and then dropped / mis-aggregated)."""
+    from syncmaven_spark.operators.scale import salted_aggregate, salted_join
+
+    df = spark.createDataFrame([(1, 9)], "k long, _salt long")
+    clean = spark.createDataFrame([(1, 2)], "k long, v long")
+    with pytest.raises(ValueError, match="_salt"):
+        salted_join(df, clean, "k")
+    with pytest.raises(ValueError, match="_salt"):
+        salted_join(clean, df, "k")
+    with pytest.raises(ValueError, match="_salt"):
+        salted_aggregate(df, ["k"], {"s": ("sum", "_salt")})

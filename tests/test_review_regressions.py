@@ -1,6 +1,6 @@
 """Regression tests for code-review findings across the sinks, the runner,
-cursors, SQL parameters, asof/range joins, dedup, similarity and the
-multimodal operators."""
+cursors, SQL parameters, dedup, similarity and the multimodal
+operators."""
 
 import datetime as dt
 import glob
@@ -17,16 +17,10 @@ from syncmaven_spark.cursor import (
 from syncmaven_spark.enrich import CallableEnrichment, enrich_dataframe
 from syncmaven_spark.operators import cosine_topk_bruteforce, cosine_topk_ivf
 from syncmaven_spark.operators.graph import dedup_cluster_assignments
-from syncmaven_spark.operators.joins import (
-    asof_join,
-    asof_join_grouped,
-    range_join,
-)
 from syncmaven_spark.operators.multimodal import (
     extract_features,
     sample_video_frames,
 )
-from syncmaven_spark.operators.scale import salted_join
 from syncmaven_spark.operators.similarity import train_centroids
 from syncmaven_spark.oracle import compare
 from syncmaven_spark.project import read_project
@@ -73,23 +67,6 @@ def test_sheets_buffer_survives_checkpoint_restarts(spark, tmp_path):
     assert len(client.writes[-1]) == 25
     assert result.stats.success == 25
     assert result.stats.received == 25
-
-
-def test_asof_join_null_in_matched_row_not_backfilled(spark):
-    left = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1, 0, 3))], ["k", "ts"]
-    )
-    right = spark.createDataFrame(
-        [
-            (1, dt.datetime(2024, 1, 1, 0, 1), 5.0, "x"),
-            (1, dt.datetime(2024, 1, 1, 0, 2), None, "y"),  # matched row, v NULL
-        ],
-        "k long, ts timestamp, v double, tag string",
-    )
-    row = asof_join(left, right, on="ts", by="k").first()
-    # all values must come from the ts=0:02 row — no stale backfill from 0:01
-    assert row.right_v is None
-    assert row.right_tag == "y"
 
 
 def test_distributed_string_cursor_single_chunk(spark, tmp_path):
@@ -219,27 +196,6 @@ def test_exact_dedup_null_position_is_distinct(spark):
     assert by_id[4] is False and by_id[5] is False
 
 
-def test_salted_join_rejects_right_outer_and_spreads_duplicates(spark):
-    """Right/full outer emits spurious NULL-padded rows
-    under salting (reject); and byte-identical hot rows must spread over
-    salts (a content-hash salt put them all on one)."""
-    import pytest as _pytest
-
-
-    left = spark.createDataFrame([("k", 1)] * 64, "key string, v int")
-    right = spark.createDataFrame([("k", 9)], "key string, w int")
-    with _pytest.raises(ValueError, match="inner/left"):
-        salted_join(left, right, "key", how="right")
-    out = salted_join(left, right, "key", factor=8)
-    assert out.count() == 64  # equivalent to the plain join
-    salts = (
-        left.withColumn("_s", __import__("pyspark").sql.functions.floor(
-            __import__("pyspark").sql.functions.rand(0x5A17) * 8))
-        .select("_s").distinct().count()
-    )
-    assert salts > 1  # identical rows land on multiple salts
-
-
 def test_simhash_exact_signature_blocking(spark):
     """max_hamming=0 (single 64-bit chunk) no longer overflows the long
     literal; identical texts pair, near-identical do not."""
@@ -253,21 +209,6 @@ def test_simhash_exact_signature_blocking(spark):
     )
     pairs = simhash_near_dups(df, "text", "doc_id", max_hamming=0).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
-
-
-def test_asof_grouped_numeric_on_with_tolerance(spark):
-    """A Timedelta tolerance against a numeric ordering
-    column crashed pd.merge_asof inside the UDF."""
-    left = spark.createDataFrame(
-        [("k", 10.0, "l1"), ("k", 20.0, "l2")], "k string, ts double, lv string"
-    )
-    right = spark.createDataFrame(
-        [("k", 9.0, "r1"), ("k", 12.0, "r2")], "k string, ts double, rv string"
-    )
-    out = {r.lv: r.right_rv for r in asof_join_grouped(
-        left, right, on="ts", by="k", tolerance_seconds=2.0
-    ).collect()}
-    assert out == {"l1": "r1", "l2": None}  # 20-12=8 > 2 → no match
 
 
 def test_empty_text_scores_zero_tokens(spark):
@@ -485,39 +426,6 @@ def test_sheets_append_rejects_nested_values_like_buffered_mode():
         out.handle_row({"a": {"nested": 1}})
 
 
-def test_asof_join_null_keys_never_match(spark):
-    """NULL by-keys matched each other through the
-    window partitionBy, diverging from SQL ASOF (NULL = NULL is never true).
-    Null-keyed/null-ts LEFT rows must pass through unmatched; null-keyed or
-    null-ts RIGHT rows must never be carried into any match."""
-    left = spark.createDataFrame(
-        [(None, 10.0), ("u1", 10.0), ("u1", None)],
-        "user_id string, ts double",
-    )
-    right = spark.createDataFrame(
-        [(None, 5.0, 99.0), ("u1", 5.0, 7.0), ("u1", None, 42.0)],
-        "user_id string, ts double, value double",
-    )
-    for fn in (asof_join, asof_join_grouped):
-        rows = {
-            (r["user_id"], r["ts"]): r["right_value"]
-            for r in fn(left, right, on="ts", by="user_id").collect()
-        }
-        assert len(rows) == 3, fn.__name__
-        # null key: no match even though a null-keyed right row exists
-        assert rows[(None, 10.0)] is None, fn.__name__
-        # normal match unaffected; the null-ts right row (42.0) never wins
-        assert rows[("u1", 10.0)] == 7.0, fn.__name__
-        # null left ts: r.ts <= NULL is unknown -> unmatched
-        assert rows[("u1", None)] is None, fn.__name__
-
-
-def test_asof_join_rejects_non_backward_direction(spark):
-    df = spark.createDataFrame([("u", 1.0)], "user_id string, ts double")
-    with pytest.raises(ValueError, match="backward"):
-        asof_join(df, df, on="ts", by="user_id", direction="forward")
-
-
 def test_audio_features_short_clip_has_no_nan():
     """A valid 0- or 1-frame WAV produced an
     all-NaN feature vector (np.mean of an empty diff) with decode_ok=True —
@@ -634,21 +542,6 @@ def test_dedup_cluster_assignments_forwards_cc_kwargs(spark, tmp_path):
     assert out.filter("is_canonical").count() == 1
     # the distributed loop actually used the supplied directory
     assert (tmp_path / "labels").exists()
-
-
-def test_salted_ops_reject_preexisting_salt_column(spark):
-    """An input already carrying '_salt' was
-    silently overwritten (and then dropped / mis-aggregated)."""
-    from syncmaven_spark.operators.scale import salted_aggregate, salted_join
-
-    df = spark.createDataFrame([(1, 9)], "k long, _salt long")
-    clean = spark.createDataFrame([(1, 2)], "k long, v long")
-    with pytest.raises(ValueError, match="_salt"):
-        salted_join(df, clean, "k")
-    with pytest.raises(ValueError, match="_salt"):
-        salted_join(clean, df, "k")
-    with pytest.raises(ValueError, match="_salt"):
-        salted_aggregate(df, ["k"], {"s": ("sum", "_salt")})
 
 
 def test_tfidf_cache_lives_in_bounded_pool(spark):
@@ -1168,92 +1061,6 @@ def test_lsh_bucket_cap_bounds_degenerate_buckets(spark):
     assert len(full) == n * (n - 1) // 2
 
 
-def test_asof_variants_agree_on_nan_right_ts_and_long_precision(spark):
-    """A NaN right `on` crashed the grouped
-    variant inside pd.merge_asof; and merge_asof's NaN-fill upcast int64
-    value columns to float64, corrupting ids above 2^53 whenever the group
-    had any unmatched left row. Both variants must agree and keep exact
-    longs."""
-    big = 9007199254740993  # 2^53 + 1: not representable as float64
-    left = spark.createDataFrame(
-        [("u", 0.5), ("u", 2.0)], "k string, ts double"
-    )
-    right = spark.createDataFrame(
-        [("u", float("nan"), 1), ("u", 1.0, big)],
-        "k string, ts double, event_id long",
-    )
-    for fn in (asof_join, asof_join_grouped):
-        rows = {r["ts"]: r["right_event_id"]
-                for r in fn(left, right, on="ts", by="k").collect()}
-        assert rows[0.5] is None, fn.__name__   # nothing precedes 0.5
-        assert rows[2.0] == big, fn.__name__    # exact long, not 2^53
-
-
-def test_asof_grouped_unmatched_floats_are_null_not_nan(spark):
-    """Unmatched rows came back as NaN (isNull false,
-    aggregates poisoned) in float right columns instead of true NULL."""
-    from pyspark.sql import functions as F
-
-
-    left = spark.createDataFrame(
-        [("u", 1.0), ("u", 5.0)], "k string, ts double"
-    )
-    right = spark.createDataFrame(
-        [("u", 3.0, 7.5)], "k string, ts double, v double"
-    )
-    out = asof_join_grouped(left, right, on="ts", by="k")
-    unmatched = out.filter(F.col("ts") == 1.0).first()
-    assert unmatched["right_v"] is None
-    assert out.filter(F.col("right_v").isNull()).count() == 1
-
-
-def test_asof_grouped_tied_right_ts_deterministic(spark):
-    """Tied right timestamps resolved by shuffle order (unstable
-    quicksort) — a task retry could emit a different match. Both variants
-    must pick the same struct-max winner across runs and partitionings."""
-    left = spark.createDataFrame([("u", 10.0)], "k string, ts double")
-    right = spark.createDataFrame(
-        [("u", 10.0, "a"), ("u", 10.0, "b"), ("u", 10.0, "c")],
-        "k string, ts double, tag string",
-    ).repartition(8)
-    for fn in (asof_join, asof_join_grouped):
-        for _ in range(3):
-            assert fn(left, right, on="ts", by="k").first()["right_tag"] == "c"
-
-
-def test_asof_join_supports_map_value_columns(spark):
-    """The determinism tie-break ordered by the full
-    right struct, so any map value column failed analysis
-    (INVALID_ORDERING_TYPE); maps now fall back to a hashed tie-break."""
-    left = spark.createDataFrame([("u", 5.0)], "k string, ts double")
-    right = spark.createDataFrame(
-        [("u", 1.0, {"plan": "pro"})],
-        "k string, ts double, props map<string,string>",
-    )
-    row = asof_join(left, right, on="ts", by="k").first()
-    assert row["right_props"] == {"plan": "pro"}
-
-
-def test_range_join_rejects_pathological_interval(spark):
-    """One open-ended interval (hi=1e12) exploded into
-    a ~1e12-element sequence and killed the job with an opaque error; the
-    guard now fails fast with the offending bounds in the message."""
-    left = spark.createDataFrame([(5.0,)], "v double")
-    right = spark.createDataFrame(
-        [(0.0, 1.0e12, "open-ended")], "lo double, hi double, band string"
-    )
-    ok = range_join(
-        left, right, "v", "lo", "hi", bucket_size=1.0,
-        max_buckets_per_interval=10_000_000_000_000,
-    )
-    # with a big-enough bound the guard is inert (plan-level sanity only)
-    assert "band" in ok.columns
-    with pytest.raises(Exception, match="range_join: interval spans"):
-        range_join(
-            left, right, "v", "lo", "hi", bucket_size=1.0
-        ).collect()
-
-
 def test_extract_features_surfaces_broken_decoder(spark):
     """A systematically broken custom decoder (wrong
     arity) was swallowed per-row into decode_ok=False — a '100% successful'
@@ -1311,16 +1118,3 @@ def test_bucket_cap_zero_rejected_not_silently_disabled(spark):
             cosine_pairs_lsh(vecs, threshold=0.9, max_bucket_size=bad)
 
 
-def test_asof_grouped_left_ridx_column_survives(spark):
-    """The grouped variant's indexed lookup reserved the
-    name `_ridx`; a left DataFrame already carrying `_ridx` made
-    pd.merge_asof suffix the overlap and KeyError in every executor group."""
-    left = spark.createDataFrame(
-        [("u", 2.0, 99)], "k string, ts double, _ridx long"
-    )
-    right = spark.createDataFrame(
-        [("u", 1.0, "hit")], "k string, ts double, tag string"
-    )
-    row = asof_join_grouped(left, right, on="ts", by="k").first()
-    assert row["_ridx"] == 99          # left column preserved verbatim
-    assert row["right_tag"] == "hit"   # match still found

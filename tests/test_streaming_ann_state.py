@@ -1259,3 +1259,58 @@ def test_reindex_rederives_buckets_on_explicit_none(spark, tmp_path):
     rederived = str(tmp_path / "state_rederived")
     reindex_ann_state(spark, base, state, rederived, state_buckets=None)
     assert buckets(rederived) == _derive_state_buckets(len(rows))
+
+
+def test_epoch_jobs_keep_their_job_group(spark, prepared):
+    """Every Spark job of an ANN sync keeps the job group of the thread
+    whose work started it: the caller's ``setJobGroup`` for the state open
+    (the codebook collects), the streaming query's own run group for the
+    epoch (the id guard and the store/ids writes) — Spark gives a
+    ``foreachBatch`` thread the query's run group. Pool threads used to
+    start with no group at all, out of reach of ``cancelJobGroup``."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    rng, src, state, ckpt, _ = prepared
+    _write_vecs(spark, src, _vecs(rng, 10, start=100))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_job(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return max(tracker.getJobIdsForGroup(group))
+
+    run_ids = []
+
+    class RunIds(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            run_ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = RunIds()
+    spark.streams.addListener(listener)
+    try:
+        first = marker_job("epoch-test-before") + 1
+        sc.setJobGroup("epoch-test", "one ANN epoch")
+        _run(spark, src, state, ckpt)
+        last = marker_job("epoch-test-after")
+    finally:
+        spark.streams.removeListener(listener)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+    started = set(range(first, last))
+    caller = set(tracker.getJobIdsForGroup("epoch-test"))
+    assert len(run_ids) == 1
+    stream = set(tracker.getJobIdsForGroup(run_ids[0]))
+    assert started - caller - stream == set()
+    assert caller & started and stream & started

@@ -187,26 +187,98 @@ def test_streaming_rejects_unknown_family(spark, tmp_path):
         )
 
 
-def test_stale_checkpoint_fails_fast(spark, tmp_path):
+def _doc_writer(spark, src):
+    return lambda i: _write_docs(spark, src, [(i, (OTHER, BASE)[i % 2])])
+
+
+def _near_dup_case(spark, src, state):
+    def run(ckpt):
+        run_streaming_near_dup_sync(
+            spark, src, spark.read.parquet(src).schema, state, ckpt,
+            threshold=0.5, max_bucket_size=None,
+        )
+
+    return _doc_writer(spark, src), run
+
+
+def _decontamination_case(spark, src, state):
+    from syncmaven_spark.streaming import (
+        prepare_decontamination_state,
+        run_streaming_decontamination_sync,
+    )
+
+    prepare_decontamination_state(
+        spark, spark.createDataFrame([(10, NEAR)], "doc_id long, text string"),
+        state,
+    )
+
+    def run(ckpt):
+        run_streaming_decontamination_sync(
+            spark, src, spark.read.parquet(src).schema, state, ckpt,
+            threshold=0.3,
+        )
+
+    return _doc_writer(spark, src), run
+
+
+def _ann_case(spark, src, state):
+    from syncmaven_spark.streaming import (
+        prepare_ann_state,
+        run_streaming_ann_sync,
+    )
+
+    rng = np.random.RandomState(7)
+    ddl = "vec_id long, embedding array<double>"
+
+    def vecs(n, start):
+        return [
+            (start + i, [float(v) for v in rng.randn(8)]) for i in range(n)
+        ]
+
+    prepare_ann_state(
+        spark, spark.createDataFrame(vecs(40, 0), ddl), state,
+        n_centroids=4, m=4, n_codes=8, state_buckets=8,
+    )
+
+    def write(i):
+        spark.createDataFrame(vecs(5, 100 * i), ddl).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def run(ckpt):
+        run_streaming_ann_sync(
+            spark, src, spark.read.parquet(src).schema, state, ckpt
+        )
+
+    return write, run
+
+
+@pytest.mark.parametrize(
+    "case, driver",
+    [
+        (_near_dup_case, "run_streaming_near_dup_sync"),
+        (_decontamination_case, "run_streaming_decontamination_sync"),
+        (_ann_case, "run_streaming_ann_sync"),
+    ],
+    ids=["near-dup", "decontamination", "ann"],
+)
+def test_stale_checkpoint_fails_fast(spark, tmp_path, case, driver):
     """Round-6 advice: a recreated checkpoint over multi-epoch state used
     to re-deliver the whole corpus as epoch 0 beside stale higher-epoch
-    dirs. epochs.json now records the max processed epoch and an
-    out-of-order batch fails fast."""
+    dirs. epochs.json records the max processed epoch and an
+    out-of-order batch fails fast, in every state-backed driver, with an
+    error naming the driver."""
     src, state, ckpt = (str(tmp_path / d) for d in ("src", "state", "ckpt"))
-    _write_docs(spark, src, [(1, BASE)])
-    schema = spark.read.parquet(src).schema
-    kwargs = dict(threshold=0.5, max_bucket_size=None)
-
-    run_streaming_near_dup_sync(spark, src, schema, state, ckpt, **kwargs)
-    _write_docs(spark, src, [(2, OTHER)])
-    run_streaming_near_dup_sync(spark, src, schema, state, ckpt, **kwargs)
+    write, run = case(spark, src, state)
+    for i in (1, 2):
+        write(i)
+        run(ckpt)
 
     # checkpoint recreated from scratch over the 2-epoch state
     shutil.rmtree(ckpt)
-    with pytest.raises(Exception, match="checkpoint was recreated"):
-        run_streaming_near_dup_sync(
-            spark, src, schema, state, str(ckpt), **kwargs
-        )
+    with pytest.raises(Exception, match="checkpoint was recreated") as err:
+        run(ckpt)
+    assert f"{driver}: batch arrived with epoch 0" in str(err.value)
 
 
 def test_compaction_preserves_probe_results_and_replay(spark, tmp_path):

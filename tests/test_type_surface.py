@@ -9,8 +9,6 @@ validation, and sink serialization.
 
 import json
 
-import pytest
-
 from syncmaven_spark.runner import (
     ModelDefinition,
     SyncDefinition,
@@ -18,13 +16,6 @@ from syncmaven_spark.runner import (
     run_sync_distributed,
 )
 from syncmaven_spark.state import InMemoryStore
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from syncmaven_spark import get_spark
-
-    return get_spark(shuffle_partitions=4)
 
 
 def _sync(query, cursor, credentials):
