@@ -1,23 +1,42 @@
-"""runSync — the sync orchestrator.
+"""runSync — the sync drivers and the delivery core they share.
 
 Reference: ``packages/core/src/commands/sync.ts:345-585``. Pipeline per sync:
 resolve model × connection × stream → compile the parameterized model SQL with
 the persisted cursor → scan → per-row validate (skip invalid, abort past the
-error threshold) → enrich (row → 0..N rows) → deliver to the destination
-stream → checkpoint the max cursor every ``checkpointEvery`` rows and at end.
+error threshold) → enrich (row → 0..N rows, each stage re-validated) → deliver
+to the destination stream → checkpoint the max cursor every
+``checkpointEvery`` rows and at end. Every driver reports one
+``{received, success, skipped, failed}`` ledger (``StreamStats.fold``).
 
-Spark mapping (SURVEY §3.1): the model query runs through Catalyst
-(``spark.sql`` over registered views / JDBC pushdown); delivery is an ordered
-iteration with per-checkpoint state commits. Two delivery paths:
+The delivery contract lives here once, as two pieces:
 
-- **parity mode** (default here): ordered ``toLocalIterator`` — exact
-  reference semantics (ordered rows, mid-stream checkpoints, monotonicity
-  enforcement). Right for API-bound destinations where the sink itself is the
+- **driver-side row path** (:func:`deliver_row`): validate the row, run the
+  enrichment chain with each stage's output re-validated, ``handle_row``.
+  Invalid rows count skipped, a sink's ``RowError`` counts failed, a
+  ``HaltError`` propagates to the driver.
+- **executor-side chunk delivery** (:func:`deliver_chunk`, stateless sinks):
+  one count aggregate over a ``_valid``-tagged chunk, the valid filter, the
+  Arrow-batched enrichment chain (:func:`_enrich_distributed`) and
+  ``foreachPartition`` delivery (:func:`deliver_partitions`), with the
+  accumulators folded into a ``StreamStats``.
+
+Three drivers call them (SURVEY §3.1: the model query runs through Catalyst,
+``spark.sql`` over registered views / JDBC pushdown):
+
+- :func:`run_sync` — **parity mode**: ordered ``toLocalIterator`` through the
+  row path, plus what only parity needs: the cursor tracker, the error
+  threshold, the checkpoint cadence and the halt clamp. Exact reference
+  semantics; right for API-bound destinations where the sink itself is the
   bottleneck (HubSpot/Intercom rate limits dwarf driver throughput).
-- **scale mode** (``chunk_by_cursor_ranges`` + ``foreachPartition`` sinks):
-  cursor-range chunks planned by one count+percentile aggregate so each chunk is a
-  Catalyst-filtered scan committed independently — no global sort, no
-  driver materialization; used by distributed sinks (file/scale, http pools).
+- :func:`run_sync_distributed` — **scale mode**: cursor-range chunks planned
+  by one count+percentile aggregate (:func:`plan_cursor_chunks`) and cut by
+  one filter loop (:func:`iter_cursor_chunks`), each a Catalyst-filtered scan
+  committed independently — no global sort, no driver materialization. The
+  file sink writes partition-parallel NDJSON, stateless sinks take the chunk
+  delivery, state-backed sinks fall back to :func:`run_sync`.
+- ``streaming.run_streaming_sync`` — one ``foreachBatch`` micro-batch at a
+  time: stateless sinks take the chunk delivery, state-backed sinks the row
+  path over a capped collect.
 
 At-least-once + idempotency: rows at/after the last checkpointed cursor are
 re-sent on restart (inclusive ``>=`` predicate); sinks dedup via external-id
@@ -28,7 +47,7 @@ from __future__ import annotations
 
 import logging
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -185,6 +204,69 @@ def model_dataframe(
     return spark.sql(compile_model(model, cursor_value))
 
 
+def resolve_destination(
+    destination: str | DestinationProvider, credentials: dict[str, Any]
+) -> DestinationProvider:
+    """The sink a sync delivers to: a provider instance as given, a name
+    looked up in the sink registry."""
+    if isinstance(destination, DestinationProvider):
+        return destination
+    return get_destination(destination, credentials)
+
+
+def deliver_row(
+    row: dict[str, Any],
+    validator: RowValidator,
+    enrichments: list[Any],
+    stream: Callable[[], OutputStream],
+    stats: StreamStats,
+) -> bool:
+    """The driver-side row path (sync.ts:493-573): validate the source row,
+    run the enrichment chain (row → 0..N per stage), hand the survivors to
+    ``stream()``'s ``handle_row``. ``stream`` is called only when a row is
+    left to deliver, so a driver can open its sink lazily (sync.ts:507-521).
+
+    Every stage's output is re-validated before the next stage runs
+    (applyEnrichment, sync.ts:600-607); invalid rows, source or enriched,
+    count ``stats.skipped``. An enrichment error is logged and drops the row
+    it was enriching. A sink-declared per-row ``RowError`` counts
+    ``stats.failed`` and delivery continues (std.ts:147-175) — one bad
+    record must not abort a million-row sync. ``HaltError`` (retries
+    exhausted, fatal sink condition) and undeclared sink errors propagate:
+    bulk delivery failures are never skipped past. Returns whether the
+    source row was valid."""
+    if not validator.is_valid(row):
+        stats.skipped += 1
+        return False
+    rows = [row]
+    for enrichment in enrichments:
+        staged: list[dict[str, Any]] = []
+        for r in rows:
+            try:
+                # list() inside the try: a generator raising mid-iteration
+                # must drop this row, not crash the sync (or deliver a
+                # partial expansion)
+                enriched = list(enrichment.enrich(r))
+            except Exception as e:  # noqa: BLE001 - enrichment errors drop the row
+                log.warning("enrichment error, row dropped: %s", e)
+                continue
+            for er in enriched:
+                if validator.is_valid(er):
+                    staged.append(er)
+                else:
+                    stats.skipped += 1
+        rows = staged
+    if rows:
+        out = stream()
+        for r in rows:
+            try:
+                out.handle_row(r)
+            except RowError as e:
+                log.warning("sink rejected row: %s", e)
+                stats.failed += 1
+    return True
+
+
 def run_sync(
     spark: SparkSession,
     sync: SyncDefinition,
@@ -194,13 +276,8 @@ def run_sync(
 ) -> SyncResult:
     """Execute one sync end-to-end in parity mode (ordered delivery,
     mid-stream checkpoints) — the reference's exact lifecycle."""
-    provider = (
-        sync.destination
-        if isinstance(sync.destination, DestinationProvider)
-        else get_destination(sync.destination, sync.credentials)
-    )
-    spec = provider.stream_spec(sync.stream)
-    validator = RowValidator(spec.row_type)
+    provider = resolve_destination(sync.destination, sync.credentials)
+    validator = RowValidator(provider.stream_spec(sync.stream).row_type)
     threshold = ErrorThreshold()
 
     cursor_col = sync.model.cursor
@@ -221,26 +298,29 @@ def run_sync(
 
     streams_opened = 0
 
-    def open_stream() -> OutputStream:
-        nonlocal streams_opened
-        streams_opened += 1
-        return provider.create_output_stream(
-            sync.stream,
-            sync.credentials,
-            sync.id,
-            store,
-            full_refresh=full_refresh,
-            restart=streams_opened > 1,
-            options=sync.options,
-        )
+    def stream() -> OutputStream:
+        """The open sink stream — started lazily (sync.ts:507-521), and
+        again after each checkpoint closed it."""
+        nonlocal out, streams_opened
+        if out is None:
+            streams_opened += 1
+            out = provider.create_output_stream(
+                sync.stream,
+                sync.credentials,
+                sync.id,
+                store,
+                full_refresh=full_refresh,
+                restart=streams_opened > 1,
+                options=sync.options,
+            )
+        return out
 
     def checkpoint(final: bool) -> None:
         """Flush the sink, fold its stats, persist the cursor
         (sync.ts:472-488)."""
         nonlocal out, checkpoints
         if out is not None:
-            stats = out.finish()
-            _fold_stats(total_stats, stats)
+            total_stats.fold(out.finish())
             out = None
         if tracker is not None and tracker.max_value is not None:
             save_cursor(store, sync.id, cursor_col, tracker.max_value)
@@ -256,13 +336,13 @@ def run_sync(
         if out is None:
             return []
         try:
-            _fold_stats(total_stats, out.finish())
+            total_stats.fold(out.finish())
         except Exception:  # noqa: BLE001 - already stopping; keep going
             log.warning(
                 "final flush failed during %s; undelivered rows will be "
                 "re-sent next run", context, exc_info=True,
             )
-            _fold_stats(total_stats, out.stats)
+            total_stats.fold(out.stats)
         pending = out.undelivered_rows()
         out = None
         return pending
@@ -325,54 +405,19 @@ def run_sync(
             # invalid ones (sync.ts:566-569 counts totalRows)
             rows_since_checkpoint += 1
 
-            if not validator.is_valid(row):
+            try:
+                valid = deliver_row(
+                    row, validator, sync.enrichments, stream, total_stats
+                )
+            except HaltError as e:
+                log.error("sink halted sync %s: %s", sync.id, e)
+                halted = True
+                break
+            if not valid:
                 threshold.fail()
                 threshold.check()
                 log.warning("invalid row skipped in sync %s: %s", sync.id, row)
-                total_stats.skipped += 1
                 continue
-
-            out_rows = [row]
-            for enrichment in sync.enrichments:
-                next_rows: list[dict[str, Any]] = []
-                for r in out_rows:
-                    try:
-                        # list() inside the try: a generator raising
-                        # mid-iteration must drop this row, not crash the
-                        # sync (or deliver a partial expansion)
-                        enriched = list(enrichment.enrich(r))
-                    except Exception as e:  # enrichment errors drop the row
-                        log.warning("enrichment error, row dropped: %s", e)
-                        enriched = []
-                    next_rows.extend(
-                        er for er in enriched if validator.is_valid(er)
-                    )
-                out_rows = next_rows
-
-            for r in out_rows:
-                if out is None:
-                    out = open_stream()  # lazy start (sync.ts:507-521)
-                try:
-                    # Rate-limit retries happen inside the sink's API layer
-                    # (see sinks.base); a HaltError here means retries are
-                    # exhausted or the sink hit a fatal condition.
-                    out.handle_row(r)
-                except HaltError as e:
-                    log.error("sink halted sync %s: %s", sync.id, e)
-                    halted = True
-                    break
-                except RowError as e:
-                    # a sink-declared PER-ROW rejection counts failed and
-                    # the sync continues (std.ts:147-175) — one bad record
-                    # must not abort a million-row sync. Undeclared
-                    # exceptions still abort WITHOUT persisting the cursor
-                    # (bulk delivery failures are never skipped past).
-                    log.warning(
-                        "sink rejected row in sync %s: %s", sync.id, e
-                    )
-                    total_stats.failed += 1
-            if halted:
-                break
 
             threshold.success()
             if checkpoint_every and rows_since_checkpoint >= checkpoint_every:
@@ -401,15 +446,6 @@ def run_sync(
         checkpoints=checkpoints,
         last_cursor=tracker.max_value if tracker else None,
     )
-
-
-def _fold_stats(total: StreamStats, part: StreamStats) -> None:
-    total.received += part.received
-    total.success += part.success
-    total.skipped += part.skipped
-    total.failed += part.failed
-    for k, v in part.substreams.items():
-        total.substreams[k] = total.substreams.get(k, 0) + v
 
 
 # --- scale path -----------------------------------------------------------
@@ -445,14 +481,15 @@ def run_sync_distributed(
       sink, counts feed the same 20%/100-row error threshold, evaluated
       between chunk commits.
     - **Executor-side delivery.** The file sink writes partition-parallel
-      NDJSON (``df.write.json`` with ISO-millis); other sinks open one
-      OutputStream per partition via ``foreachPartition`` — appropriate for
-      stateless sinks (http); state-backed sinks (hubspot ID maps) belong on
+      NDJSON (``df.write.json`` with ISO-millis); stateless sinks (http)
+      take :func:`deliver_chunk`, one OutputStream per partition via
+      ``foreachPartition``. State-backed sinks (hubspot ID maps) belong on
       the parity path where the store is driver-local.
     - **Executor-side enrichment.** ``sync.enrichments`` run as Arrow-batched
       ``mapInPandas`` row→0..N stages between validation and delivery, with
       enriched outputs re-validated (``_enrich_distributed``) — the parity
-      path's driver-side loop, distributed.
+      path's row path, distributed.
+    - **Received counts source rows** on both delivery branches.
 
     At-least-once contract is unchanged: a crash between chunk write and
     cursor commit re-sends that chunk on restart; sink idempotency
@@ -462,19 +499,15 @@ def run_sync_distributed(
     from syncmaven_spark.sinks.file import FileDestination, write_ndjson_distributed
     from syncmaven_spark.validate import with_validation_column
 
-    provider = (
-        sync.destination
-        if isinstance(sync.destination, DestinationProvider)
-        else get_destination(sync.destination, sync.credentials)
-    )
+    provider = resolve_destination(sync.destination, sync.credentials)
     is_file = isinstance(provider, FileDestination)
     if not is_file and not provider.stateless:
         # State-backed sinks (hubspot ID maps, audience last-synced caches,
         # sheets clear-then-rewrite) need the driver-local store and a single
         # stream; foreachPartition would give each partition a throwaway
         # executor-local scratch store and re-run restart semantics per
-        # partition. Mirror run_streaming_sync's executor_side auto-selection
-        # and fall back to parity delivery.
+        # partition. Mirror run_streaming_sync's stateless split and fall
+        # back to parity delivery.
         log.info(
             "sync %s: destination %s is state-backed — using parity delivery",
             sync.id,
@@ -499,7 +532,7 @@ def run_sync_distributed(
     # through the projection to the scan) — round-3 rebuilt the Arrow-UDF
     # plan for every chunk, paying the py4j construction cost 10×.
     tagged_full = with_validation_column(df, spec.row_type)
-    planned_total: int | None = None
+    ranges: list[tuple[Any, Any]] = [(None, None)]
     cached_input: DataFrame | None = None
     if cursor_col:
         ranges, planned_total = plan_cursor_chunks(df, cursor_col, num_chunks)
@@ -516,21 +549,7 @@ def run_sync_distributed(
         # then read ONE snapshot, so a live source changing mid-sync can't
         # make chunk boundaries overlap or gap.
         if len(ranges) > 1 and planned_total <= cache_input_max_rows:
-            cached_input = tagged_full.persist()
-            tagged_full = cached_input
-        chunk_iter = iter(
-            (
-                tagged_full
-                if lo is None and hi is None
-                else tagged_full.filter(
-                    _chunk_predicate(df, cursor_col, lo, hi, i == 0)
-                ),
-                hi,
-            )
-            for i, (lo, hi) in enumerate(ranges)
-        )
-    else:
-        chunk_iter = iter([(tagged_full, None)])
+            cached_input = tagged_full = tagged_full.persist()
 
     out_dir = sync.credentials.get("directory")
     if is_file and not out_dir:
@@ -539,99 +558,78 @@ def run_sync_distributed(
             "directory for partition-parallel NDJSON)"
         )
 
+    def write_file_chunk(tagged: DataFrame, chunk_idx: int, mode: str):
+        """observe(): the row/validity counts and the cursor max ride the
+        write action itself — ONE evaluation of the scan + validation UDF
+        per chunk (no persist, no separate aggregate job), and the counts
+        cannot diverge from what was written if the source moves between
+        jobs."""
+        obs = Observation(f"chunk_{chunk_idx}")
+        valid = (
+            tagged.observe(obs, *_chunk_counts(cursor_col))
+            .filter(F.col("_valid"))
+            .drop("_valid")
+        )
+        out_obs = None
+        drop_acc = spark.sparkContext.accumulator(0)
+        if sync.enrichments:
+            valid = _enrich_distributed(
+                valid, sync.enrichments, spec.row_type, drop_acc
+            )
+            # enrichment changes cardinality (row → 0..N): count what was
+            # actually written with a second observation on the enriched
+            # plan, still one job
+            out_obs = Observation(f"chunk_{chunk_idx}_out")
+            valid = valid.observe(out_obs, F.count(F.lit(1)).alias("n"))
+        write_ndjson_distributed(valid, out_dir, mode=mode)
+        counts = obs.get  # resolves when the write's job completes
+        n_total, n_valid = counts["total"] or 0, counts["valid"] or 0
+        if n_total == 0:
+            return counts, StreamStats()
+        # the distributed write either commits all valid rows or raises;
+        # enriched rows the re-validation dropped never reach the file, so
+        # they count skipped here
+        return counts, StreamStats(
+            success=out_obs.get["n"] if out_obs is not None else n_valid,
+            skipped=(n_total - n_valid) + drop_acc.value,
+        )
+
     first_chunk = True
     try:
-        for chunk_idx, (tagged, _hi) in enumerate(chunk_iter):
-            agg_cols = [
-                F.count(F.lit(1)).alias("total"),
-                F.sum(F.when(F.col("_valid"), 1).otherwise(0)).alias("valid"),
-            ]
-            if cursor_col:
-                agg_cols.append(F.max(cursor_col).alias("max_cursor"))
-
-            if is_file:
-                # observe(): the row/validity counts and the cursor max ride the
-                # write action itself — ONE evaluation of the scan + validation
-                # UDF per chunk (no persist, no separate aggregate job), and the
-                # counts cannot diverge from what was written if the source
-                # moves between jobs
-                if first_chunk and tagged.isEmpty():
-                    # probe IMMEDIATELY before the destructive overwrite: an
-                    # empty first chunk must leave the previous run's output
-                    # untouched (append-mode chunks below are harmless on empty
-                    # input). The planner's row count cannot stand in for this
-                    # — a live source can lose its rows between the planning
-                    # job and this write (the same source-moves-between-jobs
-                    # window the observe() comment below covers for counts).
-                    continue
-                obs = Observation(f"chunk_{chunk_idx}")
-                tagged = tagged.observe(obs, *agg_cols)
-                valid = tagged.filter(F.col("_valid")).drop("_valid")
-                out_obs = None
-                drop_acc = None
-                if sync.enrichments:
-                    drop_acc = spark.sparkContext.accumulator(0)
-                    valid = _enrich_distributed(valid, sync, spec, drop_acc)
-                    # enrichment changes cardinality (row → 0..N): count what
-                    # was actually written with a second observation on the
-                    # enriched plan, still one job
-                    out_obs = Observation(f"chunk_{chunk_idx}_out")
-                    valid = valid.observe(out_obs, F.count(F.lit(1)).alias("n"))
-                write_ndjson_distributed(
-                    valid, out_dir, mode="overwrite" if first_chunk else "append"
+        for chunk_idx, (tagged, _hi) in enumerate(
+            _cursor_chunks(tagged_full, cursor_col, ranges)
+        ):
+            if not is_file:
+                # With the sync-wide input cache active the chunk is already
+                # a cheap filter over cached partitions — a second per-chunk
+                # persist would double-cache every row.
+                counts, chunk_stats = deliver_chunk(
+                    tagged, provider, sync.stream, sync.credentials, sync.id,
+                    sync.options, sync.enrichments, restart=not first_chunk,
+                    cursor_col=cursor_col, persist=cached_input is None,
                 )
-                counts = obs.get  # resolves when the write's job completes
-                n_total, n_valid = counts["total"] or 0, counts["valid"] or 0
-                if n_total == 0:
-                    # the append saw zero rows — keep first_chunk/checkpoint
-                    # semantics identical to a skipped chunk
-                    continue
-                # the distributed write either commits all valid rows or raises
-                written = out_obs.get["n"] if out_obs is not None else n_valid
-                delivered_success, delivered_failed = written, 0
-                # enriched rows the re-validation dropped never reach the file;
-                # without this they vanish from received/success/skipped/failed
-                extra_skipped = drop_acc.value if drop_acc is not None else 0
+            elif first_chunk and tagged.isEmpty():
+                # probe IMMEDIATELY before the destructive overwrite: an
+                # empty first chunk must leave the previous run's output
+                # untouched (append-mode chunks are harmless on empty
+                # input). The planner's row count cannot stand in for this
+                # — a live source can lose its rows between the planning
+                # job and this write.
+                continue
             else:
-                # foreachPartition is RDD-backed: observed metrics never reach
-                # the listener (measured — obs.get blocks forever), so this
-                # path pays one persisted pre-count instead; sink-reported stats
-                # ride accumulators back so failed deliveries are not silently
-                # folded into success. With the sync-wide input cache active
-                # the chunk is already a cheap filter over cached partitions —
-                # a second per-chunk persist would double-cache every row.
-                chunk_persisted = cached_input is None
-                if chunk_persisted:
-                    tagged = tagged.persist()
-                sc = spark.sparkContext
-                acc = {k: sc.accumulator(0)
-                       for k in ("received", "success", "skipped", "failed")}
-                drop_acc = sc.accumulator(0)
-                try:
-                    counts = tagged.agg(*agg_cols).first()
-                    n_total, n_valid = counts["total"] or 0, counts["valid"] or 0
-                    if n_total == 0:
-                        continue
-                    valid = tagged.filter(F.col("_valid")).drop("_valid")
-                    if sync.enrichments:
-                        valid = _enrich_distributed(valid, sync, spec, drop_acc)
-                    deliver_partitions(
-                        valid, provider, sync.stream, sync.credentials, sync.id,
-                        sync.options, restart=not first_chunk, stats_acc=acc,
-                    )
-                finally:
-                    if chunk_persisted:
-                        tagged.unpersist()
-                delivered_success = acc["success"].value
-                delivered_failed = acc["failed"].value
-                extra_skipped = acc["skipped"].value + drop_acc.value
+                counts, chunk_stats = write_file_chunk(
+                    tagged, chunk_idx, "overwrite" if first_chunk else "append"
+                )
+            n_total, n_valid = counts["total"] or 0, counts["valid"] or 0
+            if n_total == 0:
+                # keep first_chunk/checkpoint semantics identical to a
+                # skipped chunk
+                continue
 
             threshold.success(n_valid)
             threshold.fail(n_total - n_valid)
-            total_stats.received += n_total
-            total_stats.skipped += (n_total - n_valid) + extra_skipped
-            total_stats.success += delivered_success
-            total_stats.failed += delivered_failed
+            chunk_stats.received = n_total
+            total_stats.fold(chunk_stats)
 
             if cursor_col and counts["max_cursor"] is not None:
                 # `is not None`, not truthiness: 0 / 0.0 are valid cursor values
@@ -652,55 +650,114 @@ def run_sync_distributed(
     )
 
 
+def _chunk_counts(cursor_col: str | None) -> list:
+    """The per-chunk aggregate over a ``_valid``-tagged DataFrame: row
+    count, valid count and, with a cursor, the cursor max."""
+    cols = [
+        F.count(F.lit(1)).alias("total"),
+        F.sum(F.when(F.col("_valid"), 1).otherwise(0)).alias("valid"),
+    ]
+    if cursor_col:
+        cols.append(F.max(cursor_col).alias("max_cursor"))
+    return cols
+
+
+def deliver_chunk(
+    tagged: DataFrame,
+    provider: DestinationProvider,
+    stream_name: str,
+    credentials: dict[str, Any],
+    sync_id: str,
+    options: dict[str, Any],
+    enrichments: list[Any],
+    restart: bool,
+    cursor_col: str | None = None,
+    persist: bool = True,
+) -> tuple[Any, StreamStats]:
+    """The executor-side delivery of one ``_valid``-tagged chunk (or
+    micro-batch) into a stateless sink: the count aggregate, the valid
+    filter, the enrichment chain with its drop accumulator, then
+    :func:`deliver_partitions`. Returns the counts row (``total``,
+    ``valid``, and ``max_cursor`` with a ``cursor_col``) and the chunk's
+    stats: the sink-reported accumulators, with validation and
+    re-validation drops added to ``skipped``. An empty chunk delivers
+    nothing.
+
+    foreachPartition is RDD-backed: observed metrics never reach the
+    listener (measured — obs.get blocks forever), so the counts cost one
+    aggregate job; ``persist`` keeps that job and the delivery on one pass
+    over the input (pass False when the input is already cached)."""
+    sc = tagged.sparkSession.sparkContext
+    acc = {k: sc.accumulator(0) for k in ("received", "success", "skipped", "failed")}
+    drop_acc = sc.accumulator(0)
+    if persist:
+        tagged = tagged.persist()
+    try:
+        counts = tagged.agg(*_chunk_counts(cursor_col)).first()
+        n_total, n_valid = counts["total"] or 0, counts["valid"] or 0
+        if n_total:
+            valid = _enrich_distributed(
+                tagged.filter(F.col("_valid")).drop("_valid"),
+                enrichments,
+                provider.stream_spec(stream_name).row_type,
+                drop_acc,
+            )
+            deliver_partitions(
+                valid, provider, stream_name, credentials, sync_id, options,
+                restart=restart, stats_acc=acc,
+            )
+    finally:
+        if persist:
+            tagged.unpersist()
+    return counts, StreamStats(
+        received=acc["received"].value,
+        success=acc["success"].value,
+        skipped=(n_total - n_valid) + acc["skipped"].value + drop_acc.value,
+        failed=acc["failed"].value,
+    )
+
+
 def _enrich_distributed(
-    valid: DataFrame, sync: SyncDefinition, spec, drop_acc=None
+    valid: DataFrame, enrichments: list[Any], row_type: dict[str, Any], drop_acc
 ) -> DataFrame:
     """Executor-parallel enrichment chain for the distributed path
     (reference applies enrichments between validation and delivery,
     sync.ts:539-554): each stage is an Arrow-batched ``mapInPandas``
     row→0..N expansion, and outputs are re-validated AFTER EACH STAGE —
-    the reference (applyEnrichment, sync.ts:600-607) and this repo's own
-    parity loop both drop a stage's invalid output before the next stage
-    runs, so a row one stage invalidates never feeds the next.
+    the reference (applyEnrichment, sync.ts:600-607) and the driver-side
+    :func:`deliver_row` both drop a stage's invalid output before the next
+    stage runs, so a row one stage invalidates never feeds the next.
 
-    ``drop_acc`` (optional accumulator): counts enriched rows dropped by the
+    ``drop_acc`` (accumulator): counts enriched rows dropped by the
     re-validation so they surface in ``stats.skipped`` — observe() cannot
     report them on RDD-backed ``foreachPartition`` actions, and the file
     path's write-side observation only sees survivors. Task retries can
     over-count, the same caveat the delivery accumulators already carry."""
+    from pyspark.sql import types as T
+
     from syncmaven_spark.enrich import enrich_dataframe
     from syncmaven_spark.validate import with_validation_column
 
-    for enrichment in sync.enrichments:
-        valid = enrich_dataframe(valid, lambda e=enrichment: e)
-        tagged = with_validation_column(valid, spec.row_type)
-        if drop_acc is None:
-            valid = tagged.filter(F.col("_valid")).drop("_valid")
-        else:
-            valid = _filter_valid_counting(tagged, drop_acc)
+    for enrichment in enrichments:
+        tagged = with_validation_column(
+            enrich_dataframe(valid, lambda e=enrichment: e), row_type
+        )
+        schema = T.StructType(
+            [f for f in tagged.schema.fields if f.name != "_valid"]
+        )
+
+        def keep_valid(batches, cols=schema.fieldNames()):
+            # an Arrow-batched filter(_valid) whose dropped-row count rides
+            # drop_acc back from the executors
+            for pdf in batches:
+                mask = pdf["_valid"].fillna(False).astype(bool)
+                dropped = int((~mask).sum())
+                if dropped:
+                    drop_acc.add(dropped)
+                yield pdf.loc[mask, cols]
+
+        valid = tagged.mapInPandas(keep_valid, schema)
     return valid
-
-
-def _filter_valid_counting(tagged: DataFrame, drop_acc) -> DataFrame:
-    """Filter to ``_valid`` rows while adding the dropped-row count to
-    ``drop_acc`` — an Arrow-batched stand-in for ``filter`` when the count
-    must ride an accumulator back from the executors."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [f for f in tagged.schema.fields if f.name != "_valid"]
-    )
-    cols = [f.name for f in out_schema.fields]
-
-    def keep_valid(batches):
-        for pdf in batches:
-            mask = pdf["_valid"].fillna(False).astype(bool)
-            dropped = int((~mask).sum())
-            if dropped:
-                drop_acc.add(dropped)
-            yield pdf.loc[mask, cols]
-
-    return tagged.mapInPandas(keep_valid, out_schema)
 
 
 def deliver_partitions(
@@ -836,36 +893,32 @@ def plan_cursor_chunks(
     return ranges, row["n"]
 
 
-def chunk_by_cursor_ranges(
-    df: DataFrame, cursor_col: str, num_chunks: int
-) -> list[tuple[Any, Any]]:
-    """Boundary-planning half of :func:`plan_cursor_chunks` (kept for
-    callers that only need the ranges)."""
-    return plan_cursor_chunks(df, cursor_col, num_chunks)[0]
-
-
-def _chunk_predicate(df: DataFrame, cursor_col: str, lo, hi, first: bool):
-    """NATIVE-typed range predicate for one chunk — pushdown-friendly: the
-    raw cursor column compares against literals of its own type."""
-    codec = _cursor_codec(df.schema[cursor_col].dataType)
-    _, from_lit = codec
-    c = F.col(cursor_col)
-    pred = F.lit(True)
-    if lo is not None:
-        pred = pred & (c > from_lit(lo))
-    if hi is not None:
-        pred = pred & (c <= from_lit(hi))
-    if first:
-        pred = pred | c.isNull()  # nulls are the smallest cursor value
-    return pred
-
-
 def iter_cursor_chunks(df: DataFrame, cursor_col: str, num_chunks: int):
     """Yield ``(chunk_df, upper_bound)`` in cursor order for per-chunk
     commit. Nulls (the smallest cursor value) ride in the first chunk."""
     ranges, _ = plan_cursor_chunks(df, cursor_col, num_chunks)
+    yield from _cursor_chunks(df, cursor_col, ranges)
+
+
+def _cursor_chunks(scan: DataFrame, cursor_col: str | None, ranges):
+    """The chunk-filter loop: ``scan`` cut by each planned ``(lo, hi]``
+    range. The plan may come from a different DataFrame with the same
+    cursor column — :func:`run_sync_distributed` plans on the untagged
+    model scan and filters the (possibly persisted) validation-tagged one;
+    a single unbounded range yields ``scan`` itself."""
     for i, (lo, hi) in enumerate(ranges):
         if lo is None and hi is None:
-            yield df, hi
-        else:
-            yield df.filter(_chunk_predicate(df, cursor_col, lo, hi, i == 0)), hi
+            yield scan, hi
+            continue
+        # NATIVE-typed range predicate — pushdown-friendly: the raw cursor
+        # column compares against literals of its own type
+        _, from_lit = _cursor_codec(scan.schema[cursor_col].dataType)
+        c = F.col(cursor_col)
+        pred = F.lit(True)
+        if lo is not None:
+            pred = pred & (c > from_lit(lo))
+        if hi is not None:
+            pred = pred & (c <= from_lit(hi))
+        if i == 0:
+            pred = pred | c.isNull()  # nulls are the smallest cursor value
+        yield scan.filter(pred), hi

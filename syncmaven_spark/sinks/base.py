@@ -47,6 +47,15 @@ class StreamStats:
     failed: int = 0
     substreams: dict[str, int] = field(default_factory=dict)
 
+    def fold(self, part: StreamStats) -> None:
+        """Add a stream's (or a chunk's) stats into this ledger."""
+        self.received += part.received
+        self.success += part.success
+        self.skipped += part.skipped
+        self.failed += part.failed
+        for k, v in part.substreams.items():
+            self.substreams[k] = self.substreams.get(k, 0) + v
+
     def as_dict(self) -> dict[str, Any]:
         d = {
             "received": self.received,

@@ -21,8 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from syncmaven_spark.sinks import get_destination
-from syncmaven_spark.sinks.base import DestinationProvider, RowError
+from syncmaven_spark.sinks.base import DestinationProvider, StreamStats
 from syncmaven_spark.validate import RowValidator
 
 #: default per-micro-batch row cap for the driver-delivery (state-backed
@@ -48,23 +47,23 @@ def run_streaming_sync(
     checkpoint_dir: str,
     options: dict[str, Any] | None = None,
     transform: Callable[[DataFrame], DataFrame] | None = None,
-    executor_side: bool | None = None,
     enrichments: list[Any] | None = None,
     max_driver_batch_rows: int = DEFAULT_MAX_DRIVER_BATCH_ROWS,
 ) -> dict[str, int]:
     """Incrementally sync a growing parquet directory into a destination.
 
-    Each micro-batch is validated and delivered through the same sink
-    interface as the batch runner; Spark's checkpoint tracks which source
-    files were already processed (at-least-once into idempotent sinks, the
-    same delivery contract as the reference).
+    Each micro-batch is validated and delivered through the same delivery
+    core as the batch runner (``runner.deliver_chunk`` / ``deliver_row``);
+    Spark's checkpoint tracks which source files were already processed
+    (at-least-once into idempotent sinks, the same delivery contract as the
+    reference). Returns the ``{received, success, skipped, failed}`` totals.
 
-    Delivery is split by sink statefulness (``executor_side=None`` = auto):
+    Delivery is split by sink statefulness (``provider.stateless``):
 
-    - **stateless sinks** (``provider.stateless``, e.g. http): rows are
-      delivered with ``foreachPartition`` — one OutputStream per partition
-      on executors, nothing materializes on the driver, so micro-batch size
-      is bounded by executor memory, not driver memory;
+    - **stateless sinks** (e.g. http): rows are delivered with
+      ``foreachPartition`` — one OutputStream per partition on executors,
+      nothing materializes on the driver, so micro-batch size is bounded by
+      executor memory, not driver memory;
     - **state-backed sinks** (hubspot ID maps, audience caches, the
       single-file NDJSON sink): rows are collected to the driver where the
       shared store lives — correct but driver-bounded, exactly the
@@ -72,82 +71,35 @@ def run_streaming_sync(
       process, sync.ts:493-573). That collection is guarded by
       ``max_driver_batch_rows`` (default 100k): a micro-batch larger than
       the cap fails fast with :class:`DriverBatchTooLarge` instead of
-      OOMing the driver — re-route to a stateless sink
-      (``executor_side=True``), raise the cap explicitly, or shrink
-      micro-batches (``maxFilesPerTrigger`` on the source).
+      OOMing the driver — raise the cap explicitly, or shrink micro-batches
+      (``maxFilesPerTrigger`` on the source).
     """
-    from syncmaven_spark.runner import deliver_partitions
+    from syncmaven_spark.runner import deliver_chunk, deliver_row, resolve_destination
     from syncmaven_spark.validate import with_validation_column
 
-    provider = (
-        destination
-        if isinstance(destination, DestinationProvider)
-        else get_destination(destination, credentials)
-    )
+    provider = resolve_destination(destination, credentials)
     spec = provider.stream_spec(stream)
     validator = RowValidator(spec.row_type)
-    totals = {"received": 0, "success": 0, "skipped": 0, "failed": 0}
-    use_executor = provider.stateless if executor_side is None else executor_side
+    options = options or {}
+    enrichments = enrichments or []
+    stats = StreamStats()
+    opened = 0
 
     reader = spark.readStream.schema(schema).parquet(source_dir)
     if transform is not None:
         reader = transform(reader)
 
-    opened = {"n": 0}
-
     def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if use_executor:
-            # vectorized validation; one persisted pass feeds the counts
-            # aggregate and the partition-parallel delivery (observe() does
-            # not fire for RDD-backed foreachPartition — see runner.py)
-            tagged = with_validation_column(batch_df, spec.row_type).persist()
-            try:
-                counts = tagged.agg(
-                    F.count(F.lit(1)).alias("total"),
-                    F.sum(F.when(F.col("_valid"), 1).otherwise(0)).alias("valid"),
-                ).first()
-                n_total = counts["total"] or 0
-                n_valid = counts["valid"] or 0
-                if n_total == 0:
-                    return
-                valid = tagged.filter(F.col("_valid")).drop("_valid")
-                sc = spark.sparkContext
-                drop_acc = sc.accumulator(0)
-                if enrichments:
-                    # row → 0..N enrichment stages, executor-parallel, with
-                    # PER-STAGE re-validation — same chain as
-                    # run_sync_distributed (a stage's invalid output never
-                    # feeds the next stage); drops ride drop_acc
-                    from syncmaven_spark.enrich import enrich_dataframe
-                    from syncmaven_spark.runner import _filter_valid_counting
-
-                    for enrichment in enrichments:
-                        valid = enrich_dataframe(
-                            valid, lambda e=enrichment: e
-                        )
-                        valid = _filter_valid_counting(
-                            with_validation_column(valid, spec.row_type),
-                            drop_acc,
-                        )
-                # sink-reported stats ride accumulators back from the
-                # executors, so both delivery paths report the same way:
-                # received = rows handed to sinks, failed = sink failures,
-                # skipped = validation skips (+ sink-side skips)
-                acc = {k: sc.accumulator(0)
-                       for k in ("received", "success", "skipped", "failed")}
-                deliver_partitions(
-                    valid, provider, stream, credentials, sync_id,
-                    options or {}, restart=opened["n"] > 0, stats_acc=acc,
-                )
-            finally:
-                tagged.unpersist()
-            opened["n"] += 1
-            totals["received"] += acc["received"].value
-            totals["success"] += acc["success"].value
-            totals["failed"] += acc["failed"].value
-            totals["skipped"] += (
-                (n_total - n_valid) + acc["skipped"].value + drop_acc.value
+        nonlocal opened
+        if provider.stateless:
+            counts, batch_stats = deliver_chunk(
+                with_validation_column(batch_df, spec.row_type), provider,
+                stream, credentials, sync_id, options, enrichments,
+                restart=opened > 0,
             )
+            if counts["total"]:
+                opened += 1
+            stats.fold(batch_stats)
             return
 
         # Bounded driver delivery: LIMIT cap+1 (not collect-then-count) so
@@ -158,60 +110,26 @@ def run_streaming_sync(
             raise DriverBatchTooLarge(
                 f"micro-batch epoch {epoch_id} exceeds the driver-delivery "
                 f"cap of {max_driver_batch_rows} rows for state-backed sink "
-                f"{provider.name!r}. Remedies: deliver executor-side with a "
-                "stateless sink (executor_side=True), raise "
-                "max_driver_batch_rows explicitly, or bound micro-batch "
-                "size at the source (e.g. maxFilesPerTrigger)."
+                f"{provider.name!r}. Remedies: raise max_driver_batch_rows "
+                "explicitly, or bound micro-batch size at the source (e.g. "
+                "maxFilesPerTrigger)."
             )
         if not collected:
             return
         out = provider.create_output_stream(
-            stream,
-            credentials,
-            sync_id,
-            store,
-            restart=opened["n"] > 0,
-            options=options or {},
+            stream, credentials, sync_id, store,
+            restart=opened > 0, options=options,
         )
-        opened["n"] += 1
+        opened += 1
         # Rows convert to dicts one at a time inside the loop: a second
         # up-front full-batch list would double peak driver memory and
         # defeat the cap's bound.
         for spark_row in collected:
-            row = spark_row.asDict(recursive=True)
-            if not validator.is_valid(row):
-                totals["skipped"] += 1
-                continue
-            out_rows = [row]
-            for enrichment in enrichments or []:
-                next_rows: list[dict[str, Any]] = []
-                for r in out_rows:
-                    try:
-                        enriched = list(enrichment.enrich(r))
-                    except Exception:
-                        enriched = []  # enrichment errors drop the row
-                    for er in enriched:
-                        if validator.is_valid(er):
-                            next_rows.append(er)
-                        else:
-                            # re-validation drops count as skipped, same as
-                            # pre-enrichment validation failures
-                            totals["skipped"] += 1
-                out_rows = next_rows
-            for r in out_rows:
-                try:
-                    out.handle_row(r)
-                except RowError:
-                    # sink-declared per-row rejection: count failed and
-                    # continue (std.ts:147-175); other errors abort
-                    totals["failed"] += 1
-        stats = out.finish()
-        totals["received"] += stats.received
-        totals["success"] += stats.success
-        totals["failed"] += stats.failed
-        # sink-reported skips (mixpanel lookback/already-processed drops)
-        # fold in like every other delivery path (_fold_stats / acc)
-        totals["skipped"] += stats.skipped
+            deliver_row(
+                spark_row.asDict(recursive=True), validator, enrichments,
+                lambda: out, stats,
+            )
+        stats.fold(out.finish())
 
     query = (
         reader.writeStream.foreachBatch(handle_batch)
@@ -220,6 +138,8 @@ def run_streaming_sync(
         .start()
     )
     query.awaitTermination()
+    totals = stats.as_dict()
+    totals.pop("substreams", None)  # the four-key totals contract
     return totals
 
 

@@ -122,7 +122,7 @@ def test_chunk_predicates_push_down_natively(spark, tmp_path):
 def test_date_cursor_chunking(spark):
     """Date cursors plan real chunks (unix_date domain) — they previously
     crashed at analysis (cannot cast DATE to DOUBLE)."""
-    from syncmaven_spark.runner import chunk_by_cursor_ranges, plan_cursor_chunks
+    from syncmaven_spark.runner import plan_cursor_chunks
 
     df = spark.sql(
         "select date_add(date'2024-01-01', cast(id as int)) as d from range(365)"
@@ -130,7 +130,7 @@ def test_date_cursor_chunking(spark):
     ranges, total = plan_cursor_chunks(df, "d", 4)
     assert total == 365
     assert len(ranges) == 4
-    assert chunk_by_cursor_ranges(df, "d", 1) == [(None, None)]
+    assert plan_cursor_chunks(df, "d", 1)[0] == [(None, None)]
 
 
 @pytest.mark.usefixtures("spark")

@@ -73,3 +73,50 @@ def test_enrich_dataframe_map_in_pandas(spark):
     out = enrich_dataframe(df, factory)
     rows = {(r.id, r.v) for r in out.collect()}
     assert rows == {(1, "a"), (1, "A"), (3, "c"), (3, "C")}
+
+
+def test_enrichment_generator_failure_drops_whole_row(spark):
+    """A generator enrichment raising mid-iteration drops the SOURCE row's
+    entire output (reference applyEnrichment catch) — the rows yielded
+    before the error must not be delivered (they'd double up on
+    restarts)."""
+    class ExplodingEnrichment:
+        def enrich(self, row):
+            yield dict(row, part=1)
+            if row["id"] == 2:
+                raise RuntimeError("boom mid-expansion")
+            yield dict(row, part=2)
+
+    df = spark.createDataFrame([(1,), (2,), (3,)], "id long").withColumn(
+        "part", __import__("pyspark").sql.functions.lit(0)
+    )
+    out = enrich_dataframe(df, lambda: ExplodingEnrichment()).collect()
+    got = sorted((r.id, r.part) for r in out)
+    # row 2 contributes NOTHING — not even its first yielded expansion
+    assert got == [(1, 1), (1, 2), (3, 1), (3, 2)]
+
+
+def test_enrich_dataframe_hands_datetime_objects_to_enrichment(spark):
+    """Distributed enrichments received temporal
+    values as ISO STRINGS (JSON boundary) while the parity path hands
+    datetime objects — an enrichment using row['ts'].year raised on every
+    row and the rows were silently dropped."""
+    import datetime as dt
+
+
+    df = spark.createDataFrame(
+        [(1, dt.datetime(2024, 3, 1, 12, 0, 0), dt.date(2024, 3, 1))],
+        "id long, ts timestamp, d date",
+    )
+
+    def fn(row):
+        # the parity-path contract: temporal columns are objects
+        assert isinstance(row["ts"], dt.datetime), type(row["ts"])
+        assert isinstance(row["d"], dt.date), type(row["d"])
+        assert row["ts"].year == 2024
+        return [row]
+
+    out = enrich_dataframe(df, lambda: CallableEnrichment(fn)).collect()
+    assert len(out) == 1
+    assert out[0]["ts"] == dt.datetime(2024, 3, 1, 12, 0, 0)
+    assert out[0]["d"] == dt.date(2024, 3, 1)

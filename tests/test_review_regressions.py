@@ -14,7 +14,6 @@ from syncmaven_spark.cursor import (
     deserialize_cursor,
     serialize_cursor,
 )
-from syncmaven_spark.enrich import CallableEnrichment, enrich_dataframe
 from syncmaven_spark.operators import cosine_topk_bruteforce, cosine_topk_ivf
 from syncmaven_spark.operators.graph import dedup_cluster_assignments
 from syncmaven_spark.operators.multimodal import (
@@ -25,12 +24,7 @@ from syncmaven_spark.operators.similarity import train_centroids
 from syncmaven_spark.oracle import compare
 from syncmaven_spark.project import read_project
 from syncmaven_spark.queries import CATALOG
-from syncmaven_spark.runner import (
-    ModelDefinition,
-    SyncDefinition,
-    run_sync,
-    run_sync_distributed,
-)
+from syncmaven_spark.runner import ModelDefinition, SyncDefinition, run_sync
 from syncmaven_spark.sinks.base import RateLimitError, parse_retry_after
 from syncmaven_spark.sinks.google_sheets import GoogleSheetsDestination
 from syncmaven_spark.sinks.intercom import (
@@ -39,7 +33,6 @@ from syncmaven_spark.sinks.intercom import (
 )
 from syncmaven_spark.sql import SqlQuery
 from syncmaven_spark.state import InMemoryStore
-from syncmaven_spark.validate import ErrorThreshold
 from tests.conftest import SF_SMOKE
 
 
@@ -67,49 +60,6 @@ def test_sheets_buffer_survives_checkpoint_restarts(spark, tmp_path):
     assert len(client.writes[-1]) == 25
     assert result.stats.success == 25
     assert result.stats.received == 25
-
-
-def test_distributed_string_cursor_single_chunk(spark, tmp_path):
-    spark.sql(
-        "select concat('k', lpad(cast(id as string), 3, '0')) as skey, id as v "
-        "from range(40)"
-    ).createOrReplaceTempView("str_cursor_src")
-    sync = SyncDefinition(
-        id="strcur",
-        model=ModelDefinition(
-            id="m",
-            query="select * from str_cursor_src where :cursor is null or skey >= :cursor",
-            cursor="skey",
-        ),
-        destination="file",
-        stream="raw",
-        credentials={"directory": str(tmp_path / "o")},
-    )
-    result = run_sync_distributed(spark, sync, InMemoryStore(), num_chunks=4)
-    # string cursor → no double-cast chunking; every row delivered
-    assert result.stats.success == 40
-    assert result.last_cursor == "k039"
-
-
-def test_distributed_zero_cursor_persisted(spark, tmp_path):
-    spark.sql("select id - 5 as c, id as v from range(6)").createOrReplaceTempView(
-        "zero_src"
-    )  # cursor values -5..0 → max is 0 (falsy!)
-    store = InMemoryStore()
-    sync = SyncDefinition(
-        id="zerocur",
-        model=ModelDefinition(
-            id="m",
-            query="select * from zero_src where :cursor is null or c >= :cursor",
-            cursor="c",
-        ),
-        destination="file",
-        stream="raw",
-        credentials={"directory": str(tmp_path / "z")},
-    )
-    result = run_sync_distributed(spark, sync, store, num_chunks=1)
-    assert result.last_cursor == 0
-    assert store.get(["syncId=zerocur", "$lastCursor=c"])["val"] == 0
 
 
 def test_project_enrichments_compiled(tmp_path):
@@ -293,62 +243,6 @@ print("CURSOR=" + j.dumps(store.get(["syncId=tz", "$lastCursor=ts"])))
     assert stored["val"] == true_max, (stored, true_max)
 
 
-def test_enrichment_generator_failure_drops_whole_row(spark):
-    """A generator enrichment raising mid-iteration drops the SOURCE row's
-    entire output (reference applyEnrichment catch) — the rows yielded
-    before the error must not be delivered (they'd double up on
-    restarts)."""
-    class ExplodingEnrichment:
-        def enrich(self, row):
-            yield dict(row, part=1)
-            if row["id"] == 2:
-                raise RuntimeError("boom mid-expansion")
-            yield dict(row, part=2)
-
-    df = spark.createDataFrame([(1,), (2,), (3,)], "id long").withColumn(
-        "part", __import__("pyspark").sql.functions.lit(0)
-    )
-    out = enrich_dataframe(df, lambda: ExplodingEnrichment()).collect()
-    got = sorted((r.id, r.part) for r in out)
-    # row 2 contributes NOTHING — not even its first yielded expansion
-    assert got == [(1, 1), (1, 2), (3, 1), (3, 2)]
-
-
-def test_error_threshold_latched_at_fail_not_recomputed():
-    """The reference evaluates the threshold ONLY inside fail().
-    A sync sitting exactly at the boundary (20 errors / 80 successes) must
-    keep running through further SUCCESSES — only another failure may trip
-    it."""
-    t = ErrorThreshold()  # 0.2 / 100
-    for _ in range(80):
-        t.success()
-    for _ in range(20):
-        t.fail()
-    assert not t.exceeded
-    # successes past the boundary: ratio vs current totals would now be
-    # 20/100 >= 0.2, but the reference never re-evaluates on success
-    for _ in range(50):
-        t.success()
-        assert not t.exceeded, "success must never trip the threshold"
-    t.fail()  # 21/150 < 0.2 — still fine
-    assert not t.exceeded
-    # drive errors up until a FAILURE trips it: at e errors, pre-total
-    # 150 + (e - 21) + ... keep failing; eventually errors/pre >= 0.2
-    while not t.exceeded:
-        t.fail()
-    assert t.errors / (t.total - 1) >= 0.2
-
-
-def test_error_threshold_batched_fail_matches_sequential():
-    a, b = ErrorThreshold(), ErrorThreshold()
-    a.success(80)
-    b.success(80)
-    a.fail(21)
-    for _ in range(21):
-        b.fail()
-    assert a.exceeded == b.exceeded == True  # noqa: E712
-
-
 def test_ndjson_distributed_scrubs_nested_nonfinite(spark, tmp_path):
     """NaN/Infinity inside struct/array/map fields must
     serialize as null (JSON.stringify semantics), not literal NaN."""
@@ -396,20 +290,6 @@ def test_no_tzset_env_var_skips_process_tz_mutation(spark, monkeypatch):
     assert os.environ["TZ"] == "America/New_York", (
         "load_tables must not overwrite TZ when the opt-out is set"
     )
-
-
-def test_error_threshold_fail_zero_is_not_a_failure_event():
-    """Fail(0) (an all-valid chunk) must not evaluate the
-    gate — only a real failure may latch it."""
-    t = ErrorThreshold()
-    t.success(49)
-    t.fail(25)  # pre_total 73 < 100 — not exceeded
-    assert not t.exceeded
-    t.success(40)
-    t.fail(0)  # all-valid chunk: errors=25, pre_total would be 113 -> 0.22
-    assert not t.exceeded, "fail(0) must not latch the threshold"
-    t.fail(4)  # a real failure re-evaluates: 29/117 >= 0.2 -> latches
-    assert t.exceeded
 
 
 def test_sheets_append_rejects_nested_values_like_buffered_mode():
@@ -622,55 +502,6 @@ def test_nonfinite_cursor_and_literal_fail_fast():
             serialize_cursor(bad)
 
 
-def test_vectorized_validation_nan_matches_driver_path(spark):
-    """To_json rendered a NaN double as the STRING
-    "NaN", so with_validation_column rejected rows the driver-path
-    RowValidator (NaN -> null) accepted — the two documented execution
-    paths disagreed on the same sync."""
-    from syncmaven_spark.validate import RowValidator, with_validation_column
-
-    schema = {
-        "type": "object",
-        "properties": {"a": {"type": ["number", "null"]}},
-    }
-    df = spark.createDataFrame(
-        [(float("nan"),), (1.0,)], "a double"
-    )
-    got = {
-        r["a"]: r["_valid"]
-        for r in with_validation_column(df, schema).collect()
-    }
-    assert all(got.values()), got
-    # parity: the driver path agrees
-    assert RowValidator(schema).is_valid({"a": float("nan")})
-
-
-def test_enrich_dataframe_hands_datetime_objects_to_enrichment(spark):
-    """Distributed enrichments received temporal
-    values as ISO STRINGS (JSON boundary) while the parity path hands
-    datetime objects — an enrichment using row['ts'].year raised on every
-    row and the rows were silently dropped."""
-    import datetime as dt
-
-
-    df = spark.createDataFrame(
-        [(1, dt.datetime(2024, 3, 1, 12, 0, 0), dt.date(2024, 3, 1))],
-        "id long, ts timestamp, d date",
-    )
-
-    def fn(row):
-        # the parity-path contract: temporal columns are objects
-        assert isinstance(row["ts"], dt.datetime), type(row["ts"])
-        assert isinstance(row["d"], dt.date), type(row["d"])
-        assert row["ts"].year == 2024
-        return [row]
-
-    out = enrich_dataframe(df, lambda: CallableEnrichment(fn)).collect()
-    assert len(out) == 1
-    assert out[0]["ts"] == dt.datetime(2024, 3, 1, 12, 0, 0)
-    assert out[0]["d"] == dt.date(2024, 3, 1)
-
-
 def test_intercom_epoch_seconds_naive_string_is_utc():
     """A tz-less ISO STRING went through naive
     .timestamp() (host-local tz) while the datetime branch forces UTC —
@@ -843,69 +674,6 @@ def test_load_tables_skips_stray_unreadable_parquet(spark, tmp_path):
     tables = load_tables(spark, str(tmp_path), register_views=False)
     assert set(TABLE_NAMES) <= set(tables)
     assert "tmp_export" not in tables
-
-
-def test_decimal_cursor_sync_end_to_end(spark, tmp_path):
-    """A DECIMAL cursor column must work
-    through the WHOLE loop — checkpoint into a persistent (json-backed)
-    store, reload, literal-encode into the next run's predicate — not just
-    the codec unit tests. Two runs: the second re-emits only the inclusive
-    boundary row."""
-    import decimal
-
-    from syncmaven_spark.state import create_store
-
-    spark.sql(
-        "select cast(id as decimal(12,2)) as amount, id from range(5)"
-    ).createOrReplaceTempView("dec_src")
-    store = create_store(str(tmp_path / ".state"))
-    sync = SyncDefinition(
-        id="dec1",
-        model=ModelDefinition(
-            id="m",
-            query="select amount, id from dec_src where :cursor is null "
-                  "or amount >= :cursor order by amount",
-            cursor="amount",
-        ),
-        destination="file",
-        stream="raw",
-        credentials={"filename": str(tmp_path / "out.ndjson")},
-    )
-    r1 = run_sync(spark, sync, store)
-    assert r1.stats.success == 5
-    assert r1.last_cursor == decimal.Decimal("4.00")
-    r2 = run_sync(spark, sync, store)
-    # inclusive >= boundary: exactly the max row re-emitted
-    assert r2.stats.success == 1
-
-
-def test_binary_column_sync_end_to_end(spark, tmp_path):
-    """Spark hands BinaryType
-    columns to Python as BYTEARRAY (not bytes), which RowJSONEncoder's
-    bytes branch missed — any sync selecting a binary column crashed the
-    driver-path validator on the first row."""
-    spark.sql(
-        "select id, cast(concat('blob-', id) as binary) as payload "
-        "from range(3)"
-    ).createOrReplaceTempView("bin_src")
-    store = InMemoryStore()
-    sync = SyncDefinition(
-        id="bin1",
-        model=ModelDefinition(
-            id="m",
-            query="select id, payload from bin_src where :cursor is null "
-                  "or id >= :cursor order by id",
-            cursor="id",
-        ),
-        destination="file",
-        stream="raw",
-        credentials={"filename": str(tmp_path / "out.ndjson")},
-    )
-    result = run_sync(spark, sync, store)
-    assert result.stats.success == 3
-    lines = [json.loads(ln) for ln in
-             (tmp_path / "out.ndjson").read_text().splitlines()]
-    assert [r["payload"] for r in lines] == ["blob-0", "blob-1", "blob-2"]
 
 
 def test_non_latin_corpus_is_not_collapsed_by_dedup(spark):
@@ -1116,5 +884,3 @@ def test_bucket_cap_zero_rejected_not_silently_disabled(spark):
             simhash_near_dups(docs, "body", "doc_id", max_bucket_size=bad)
         with _pytest.raises(ValueError, match="max_bucket_size"):
             cosine_pairs_lsh(vecs, threshold=0.9, max_bucket_size=bad)
-
-

@@ -3,13 +3,15 @@ partition-parallel delivery, crash-resume."""
 
 import glob
 import json
+from functools import partial
 
 import pytest
 
 from syncmaven_spark.runner import (
     ModelDefinition,
     SyncDefinition,
-    chunk_by_cursor_ranges,
+    plan_cursor_chunks,
+    run_sync,
     run_sync_distributed,
 )
 from syncmaven_spark.session import load_tables
@@ -46,7 +48,7 @@ def _sync(out_dir, cursor="event_id"):
 
 def test_chunk_ranges_cover_domain(spark, testdata):
     df = testdata["events"]
-    ranges = chunk_by_cursor_ranges(df, "event_id", 4)
+    ranges = plan_cursor_chunks(df, "event_id", 4)[0]
     assert ranges[0][0] is None and ranges[-1][1] is None
     # interior bounds ascend
     interior = [hi for _, hi in ranges[:-1]]
@@ -339,8 +341,19 @@ def test_distributed_file_revalidation_drops_counted(spark, tmp_path):
     assert result.stats.skipped == 20  # the dropped twins
 
 
-def test_distributed_foreach_revalidation_drops_counted(spark, tmp_path):
-    """Same ledger contract on the foreachPartition (stateless sink) path."""
+@pytest.mark.parametrize(
+    "run",
+    [
+        pytest.param(run_sync, id="run_sync"),
+        pytest.param(
+            partial(run_sync_distributed, num_chunks=2),
+            id="run_sync_distributed",
+        ),
+    ],
+)
+def test_distributed_foreach_revalidation_drops_counted(spark, tmp_path, run):
+    """Same ledger contract on the foreachPartition (stateless sink) path
+    and on the parity driver's row path."""
     from syncmaven_spark.sinks.base import (
         DestinationProvider,
         OutputStream,
@@ -375,7 +388,8 @@ def test_distributed_foreach_revalidation_drops_counted(spark, tmp_path):
             id="m",
             query=(
                 "select event_id from events where "
-                "(:cursor is null or event_id >= :cursor) and event_id < 20"
+                "(:cursor is null or event_id >= :cursor) and event_id < 20 "
+                "order by event_id"
             ),
             cursor="event_id",
         ),
@@ -384,7 +398,7 @@ def test_distributed_foreach_revalidation_drops_counted(spark, tmp_path):
         credentials={},
         enrichments=[_make_invalid_twin_enrichment()],
     )
-    result = run_sync_distributed(spark, sync, InMemoryStore(), num_chunks=2)
+    result = run(spark, sync, InMemoryStore())
     assert result.stats.success == 20
     assert result.stats.skipped == 20
 
@@ -470,3 +484,46 @@ def test_deliver_partitions_row_error_continues(spark):
     assert acc["received"].value == 30
     assert acc["success"].value == 20   # 10 of 30 are divisible by 3
     assert acc["failed"].value == 10
+
+
+def test_distributed_string_cursor_single_chunk(spark, tmp_path):
+    spark.sql(
+        "select concat('k', lpad(cast(id as string), 3, '0')) as skey, id as v "
+        "from range(40)"
+    ).createOrReplaceTempView("str_cursor_src")
+    sync = SyncDefinition(
+        id="strcur",
+        model=ModelDefinition(
+            id="m",
+            query="select * from str_cursor_src where :cursor is null or skey >= :cursor",
+            cursor="skey",
+        ),
+        destination="file",
+        stream="raw",
+        credentials={"directory": str(tmp_path / "o")},
+    )
+    result = run_sync_distributed(spark, sync, InMemoryStore(), num_chunks=4)
+    # string cursor → no double-cast chunking; every row delivered
+    assert result.stats.success == 40
+    assert result.last_cursor == "k039"
+
+
+def test_distributed_zero_cursor_persisted(spark, tmp_path):
+    spark.sql("select id - 5 as c, id as v from range(6)").createOrReplaceTempView(
+        "zero_src"
+    )  # cursor values -5..0 → max is 0 (falsy!)
+    store = InMemoryStore()
+    sync = SyncDefinition(
+        id="zerocur",
+        model=ModelDefinition(
+            id="m",
+            query="select * from zero_src where :cursor is null or c >= :cursor",
+            cursor="c",
+        ),
+        destination="file",
+        stream="raw",
+        credentials={"directory": str(tmp_path / "z")},
+    )
+    result = run_sync_distributed(spark, sync, store, num_chunks=1)
+    assert result.last_cursor == 0
+    assert store.get(["syncId=zerocur", "$lastCursor=c"])["val"] == 0

@@ -353,7 +353,7 @@ def test_streaming_driver_batch_cap_fails_fast(spark, tmp_path):
     # wrapping — users see the cap and the remedies
     msg = str(exc_info.value)
     assert "driver-delivery cap of 10 rows" in msg
-    assert "executor_side=True" in msg
+    assert "maxFilesPerTrigger" in msg
 
     # under the cap the same stream syncs fine from a fresh checkpoint
     out2 = tmp_path / "out2.ndjson"

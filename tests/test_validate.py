@@ -141,3 +141,75 @@ def test_vectorized_json_image_matches_driver_for_dates(spark):
     # the driver path agrees
     v = RowValidator(schema)
     assert v.is_valid({"d": dt.date(2024, 5, 15), "nt": dt.datetime(2024, 5, 15, 13, 39, 5, 172000)})
+
+
+def test_vectorized_validation_nan_matches_driver_path(spark):
+    """To_json rendered a NaN double as the STRING
+    "NaN", so with_validation_column rejected rows the driver-path
+    RowValidator (NaN -> null) accepted — the two documented execution
+    paths disagreed on the same sync."""
+    from syncmaven_spark.validate import RowValidator, with_validation_column
+
+    schema = {
+        "type": "object",
+        "properties": {"a": {"type": ["number", "null"]}},
+    }
+    df = spark.createDataFrame(
+        [(float("nan"),), (1.0,)], "a double"
+    )
+    got = {
+        r["a"]: r["_valid"]
+        for r in with_validation_column(df, schema).collect()
+    }
+    assert all(got.values()), got
+    # parity: the driver path agrees
+    assert RowValidator(schema).is_valid({"a": float("nan")})
+
+
+def test_error_threshold_latched_at_fail_not_recomputed():
+    """The reference evaluates the threshold ONLY inside fail().
+    A sync sitting exactly at the boundary (20 errors / 80 successes) must
+    keep running through further SUCCESSES — only another failure may trip
+    it."""
+    t = ErrorThreshold()  # 0.2 / 100
+    for _ in range(80):
+        t.success()
+    for _ in range(20):
+        t.fail()
+    assert not t.exceeded
+    # successes past the boundary: ratio vs current totals would now be
+    # 20/100 >= 0.2, but the reference never re-evaluates on success
+    for _ in range(50):
+        t.success()
+        assert not t.exceeded, "success must never trip the threshold"
+    t.fail()  # 21/150 < 0.2 — still fine
+    assert not t.exceeded
+    # drive errors up until a FAILURE trips it: at e errors, pre-total
+    # 150 + (e - 21) + ... keep failing; eventually errors/pre >= 0.2
+    while not t.exceeded:
+        t.fail()
+    assert t.errors / (t.total - 1) >= 0.2
+
+
+def test_error_threshold_batched_fail_matches_sequential():
+    a, b = ErrorThreshold(), ErrorThreshold()
+    a.success(80)
+    b.success(80)
+    a.fail(21)
+    for _ in range(21):
+        b.fail()
+    assert a.exceeded == b.exceeded == True  # noqa: E712
+
+
+def test_error_threshold_fail_zero_is_not_a_failure_event():
+    """Fail(0) (an all-valid chunk) must not evaluate the
+    gate — only a real failure may latch it."""
+    t = ErrorThreshold()
+    t.success(49)
+    t.fail(25)  # pre_total 73 < 100 — not exceeded
+    assert not t.exceeded
+    t.success(40)
+    t.fail(0)  # all-valid chunk: errors=25, pre_total would be 113 -> 0.22
+    assert not t.exceeded, "fail(0) must not latch the threshold"
+    t.fail(4)  # a real failure re-evaluates: 29/117 >= 0.2 -> latches
+    assert t.exceeded
