@@ -1,6 +1,7 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints four compact JSON lines (see
-``render_report``); the last is the totals line:
+sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints a host-noise line (a fixed
+CPU-bound job timed before and after the entries), then four compact JSON
+lines (see ``render_report``); the last is the totals line:
 {"metric":"headline_queries_total","value":<total sec>,"value_full":...,"unit":"sec","sf":...}
 
 Each query is forced end-to-end with the noop sink (full compute, no driver
@@ -10,11 +11,14 @@ path (distributed NDJSON with ISO-millis formatting).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
+import threading
 import time
 
 # Pin the BLAS/OpenMP thread pools to 1 BEFORE numpy loads anywhere in
@@ -137,6 +141,30 @@ def _warm_min(fn) -> float:
     return round(min(warm), 3)
 
 
+_NOISE_BLOCK = bytes(range(256)) * 4096  # 1 MiB
+
+
+def noise_meter() -> float:
+    """Median seconds of a fixed CPU-bound job on every core at once: one
+    thread per core hashing the same 64 MiB (sha256 releases the GIL). It
+    does the same work on every run, so a change in it is the host's."""
+    def work() -> None:
+        h = hashlib.sha256()
+        for _ in range(64):
+            h.update(_NOISE_BLOCK)
+
+    times = []
+    for _ in range(3):
+        threads = [threading.Thread(target=work) for _ in range(os.cpu_count() or 1)]
+        t0 = time.perf_counter()
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        times.append(time.perf_counter() - t0)
+    return round(statistics.median(times), 3)
+
+
 def render_report(
     timings: dict[str, float],
     cold_timings: dict[str, float],
@@ -216,6 +244,7 @@ def main() -> None:
         cold_timings[name] = round(_timed(run), 3)
         into[name] = cold_timings[name] if cold_only else _warm_min(run)
 
+    noise_before = noise_meter()
     for name in HEADLINE:
         _time_entry(name, timings)
 
@@ -242,7 +271,12 @@ def main() -> None:
     # benched surface as it grows (compare like-for-like on the entry
     # lists BASELINE.md records next to each number).
     value_full = round(total + sum(extra_timings.values()), 3)
+    noise_after = noise_meter()
 
+    # first, so the 2000-character tail keeps render_report's lines
+    print(json.dumps({"metric": "host_noise", "unit": "sec",
+                      "before": noise_before, "after": noise_after},
+                     separators=(",", ":")))
     for line in render_report(
         timings, cold_timings, extra_timings, total, value_full, sf
     ):

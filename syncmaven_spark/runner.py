@@ -13,9 +13,14 @@ The delivery contract lives here once, as two pieces:
 - **driver-side row path** (:func:`deliver_row`): validate the row, run the
   enrichment chain with each stage's output re-validated, ``handle_row``.
   Invalid rows count skipped, a sink's ``RowError`` counts failed, a
-  ``HaltError`` propagates to the driver.
+  ``HaltError`` propagates to the driver. When the destination schema's
+  verdict on the model's column types is a constant
+  (``validate.constant_verdict`` — e.g. ``true`` for an any-object schema),
+  the driver takes it for every source row and validates none of them;
+  enriched rows, plain dicts with no static types, are always validated.
 - **executor-side chunk delivery** (:func:`deliver_chunk`, stateless sinks):
-  one count aggregate over a ``_valid``-tagged chunk, the valid filter, the
+  one count aggregate over a ``_valid``-tagged chunk (a compiled Catalyst
+  predicate when the schema compiles), the valid filter, the
   Arrow-batched enrichment chain (:func:`_enrich_distributed`) and
   ``foreachPartition`` delivery (:func:`deliver_partitions`), with the
   accumulators folded into a ``StreamStats``.
@@ -70,7 +75,11 @@ from syncmaven_spark.sinks.base import (
 )
 from syncmaven_spark.sql import SqlError, SqlQuery
 from syncmaven_spark.state import StateStore
-from syncmaven_spark.validate import ErrorThreshold, RowValidator
+from syncmaven_spark.validate import (
+    ErrorThreshold,
+    RowValidator,
+    constant_verdict,
+)
 
 log = logging.getLogger("syncmaven_spark.runner")
 
@@ -220,8 +229,10 @@ def deliver_row(
     enrichments: list[Any],
     stream: Callable[[], OutputStream],
     stats: StreamStats,
+    verdict: bool | None = None,
 ) -> bool:
-    """The driver-side row path (sync.ts:493-573): validate the source row,
+    """The driver-side row path (sync.ts:493-573): validate the source row
+    (or take ``verdict``, the schema's plan-time verdict on every source row),
     run the enrichment chain (row → 0..N per stage), hand the survivors to
     ``stream()``'s ``handle_row``. ``stream`` is called only when a row is
     left to deliver, so a driver can open its sink lazily (sync.ts:507-521).
@@ -235,7 +246,7 @@ def deliver_row(
     exhausted, fatal sink condition) and undeclared sink errors propagate:
     bulk delivery failures are never skipped past. Returns whether the
     source row was valid."""
-    if not validator.is_valid(row):
+    if not (validator.is_valid(row) if verdict is None else verdict):
         stats.skipped += 1
         return False
     rows = [row]
@@ -277,7 +288,8 @@ def run_sync(
     """Execute one sync end-to-end in parity mode (ordered delivery,
     mid-stream checkpoints) — the reference's exact lifecycle."""
     provider = resolve_destination(sync.destination, sync.credentials)
-    validator = RowValidator(provider.stream_spec(sync.stream).row_type)
+    row_type = provider.stream_spec(sync.stream).row_type
+    validator = RowValidator(row_type)
     threshold = ErrorThreshold()
 
     cursor_col = sync.model.cursor
@@ -288,6 +300,9 @@ def run_sync(
     df = model_dataframe(spark, sync.model, last_cursor)
     if max_rows is not None:
         df = df.limit(max_rows)
+    # plan metadata, no job: a constant verdict spares every source row its
+    # JSON round-trip through jsonschema; a residual keeps per-row checks
+    verdict = constant_verdict(row_type, df.schema)
 
     tracker = CursorTracker(cursor_col) if cursor_col else None
     total_stats = StreamStats()
@@ -407,7 +422,8 @@ def run_sync(
 
             try:
                 valid = deliver_row(
-                    row, validator, sync.enrichments, stream, total_stats
+                    row, validator, sync.enrichments, stream, total_stats,
+                    verdict,
                 )
             except HaltError as e:
                 log.error("sink halted sync %s: %s", sync.id, e)
@@ -477,9 +493,10 @@ def run_sync_distributed(
       into parquet/JDBC — processed executor-parallel and committed
       independently.
     - **Vectorized validation.** The JSON-Schema check runs as the
-      Arrow-batched ``_valid`` column (validate.py); valid rows flow to the
-      sink, counts feed the same 20%/100-row error threshold, evaluated
-      between chunk commits.
+      ``_valid`` column (``validate.with_validation_column``: a compiled
+      Catalyst predicate, or an Arrow-batched UDF for schemas outside the
+      compiled subset); valid rows flow to the sink, counts feed the same
+      20%/100-row error threshold, evaluated between chunk commits.
     - **Executor-side delivery.** The file sink writes partition-parallel
       NDJSON (``df.write.json`` with ISO-millis); stateless sinks (http)
       take :func:`deliver_chunk`, one OutputStream per partition via
@@ -489,7 +506,9 @@ def run_sync_distributed(
       ``mapInPandas`` row→0..N stages between validation and delivery, with
       enriched outputs re-validated (``_enrich_distributed``) — the parity
       path's row path, distributed.
-    - **Received counts source rows** on both delivery branches.
+    - **Received counts the rows handed to the sink**, as in
+      :func:`run_sync`: the sink-reported count on the chunk delivery, the
+      rows written on the file branch.
 
     At-least-once contract is unchanged: a crash between chunk write and
     cursor commit re-sends that chunk on restart; sink idempotency
@@ -589,8 +608,10 @@ def run_sync_distributed(
         # the distributed write either commits all valid rows or raises;
         # enriched rows the re-validation dropped never reach the file, so
         # they count skipped here
+        written = out_obs.get["n"] if out_obs is not None else n_valid
         return counts, StreamStats(
-            success=out_obs.get["n"] if out_obs is not None else n_valid,
+            received=written,
+            success=written,
             skipped=(n_total - n_valid) + drop_acc.value,
         )
 
@@ -628,7 +649,6 @@ def run_sync_distributed(
 
             threshold.success(n_valid)
             threshold.fail(n_total - n_valid)
-            chunk_stats.received = n_total
             total_stats.fold(chunk_stats)
 
             if cursor_col and counts["max_cursor"] is not None:

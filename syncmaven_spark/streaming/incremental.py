@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from syncmaven_spark.sinks.base import DestinationProvider, StreamStats
-from syncmaven_spark.validate import RowValidator
+from syncmaven_spark.validate import RowValidator, constant_verdict
 
 #: default per-micro-batch row cap for the driver-delivery (state-backed
 #: sink) path — large enough for any API-bound sink's realistic batch,
@@ -121,13 +121,15 @@ def run_streaming_sync(
             restart=opened > 0, options=options,
         )
         opened += 1
+        # plan metadata, no job: a constant verdict skips per-row validation
+        verdict = constant_verdict(spec.row_type, batch_df.schema)
         # Rows convert to dicts one at a time inside the loop: a second
         # up-front full-batch list would double peak driver memory and
         # defeat the cap's bound.
         for spark_row in collected:
             deliver_row(
                 spark_row.asDict(recursive=True), validator, enrichments,
-                lambda: out, stats,
+                lambda: out, stats, verdict,
             )
         stats.fold(out.finish())
 

@@ -220,7 +220,7 @@ def test_distributed_enrichment_expands_rows(spark, tmp_path):
     )
     result = run_sync_distributed(spark, sync, InMemoryStore(), num_chunks=3)
     rows = _read_ndjson_dir(out_dir)
-    assert result.stats.received == 20       # source rows
+    assert result.stats.received == 40       # rows handed to the sink
     assert result.stats.success == 40        # written after 1→2 expansion
     assert len(rows) == 40
     ids = sorted(r["event_id"] for r in rows)

@@ -1,13 +1,18 @@
 """Validation + error-threshold tests (uniparser.ts / error-threshold.ts)."""
 
 import datetime as dt
+import decimal
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import types as T
 
 from syncmaven_spark.validate import (
     ErrorThreshold,
     ErrorThresholdExceeded,
     RowValidator,
+    compile_row_schema,
     split_valid_invalid,
 )
 
@@ -213,3 +218,290 @@ def test_error_threshold_fail_zero_is_not_a_failure_event():
     assert not t.exceeded, "fail(0) must not latch the threshold"
     t.fail(4)  # a real failure re-evaluates: 29/117 >= 0.2 -> latches
     assert t.exceeded
+
+
+# --- compiled schemas --------------------------------------------------------
+
+_NAMES = ["a", "b", "c"]
+_JSON_TYPES = ["null", "boolean", "object", "array", "number", "string", "integer"]
+_DRAFTS = [
+    None,
+    "http://json-schema.org/draft-04/schema#",
+    "http://json-schema.org/draft-07/schema#",
+    "https://json-schema.org/draft/2020-12/schema",
+]
+
+_LEAF_TYPES = [
+    T.LongType(), T.IntegerType(), T.DoubleType(), T.FloatType(),
+    T.DecimalType(10, 2), T.DecimalType(38, 18), T.DecimalType(12, 0),
+    T.StringType(), T.BooleanType(), T.TimestampType(), T.DateType(),
+    T.BinaryType(),
+]
+
+
+def _spark_types(depth=2):
+    leaf = st.sampled_from(_LEAF_TYPES)
+    if depth == 0:
+        return leaf
+    inner = _spark_types(depth - 1)
+    return st.one_of(
+        leaf,
+        st.builds(T.ArrayType, inner),
+        st.builds(lambda v: T.MapType(T.StringType(), v), inner),
+        st.lists(inner, min_size=1, max_size=3).map(
+            lambda ts: T.StructType(
+                [T.StructField(n, t) for n, t in zip(_NAMES, ts)]
+            )
+        ),
+    )
+
+
+def _values(t):
+    """Values of Spark type ``t``, nulls included."""
+    if isinstance(t, (T.LongType, T.IntegerType)):
+        bound = 2**63 - 1 if isinstance(t, T.LongType) else 2**31 - 1
+        v = st.integers(-bound, bound)
+    elif isinstance(t, T.DoubleType):
+        v = st.one_of(st.floats(), st.integers(-2**60, 2**60).map(float))
+    elif isinstance(t, T.FloatType):
+        v = st.one_of(st.floats(width=32), st.integers(-2**30, 2**30).map(float))
+    elif isinstance(t, T.DecimalType):
+        bound = decimal.Decimal(10) ** (t.precision - t.scale) - 1
+        v = st.decimals(-bound, bound, places=t.scale, allow_nan=False,
+                        allow_infinity=False)
+    elif isinstance(t, T.StringType):
+        v = st.text(max_size=3)
+    elif isinstance(t, T.BooleanType):
+        v = st.booleans()
+    elif isinstance(t, T.TimestampType):
+        v = st.datetimes(dt.datetime(1990, 1, 1), dt.datetime(2100, 1, 1))
+    elif isinstance(t, T.DateType):
+        v = st.dates(dt.date(1990, 1, 1), dt.date(2100, 1, 1))
+    elif isinstance(t, T.BinaryType):
+        v = st.binary(max_size=3).map(bytearray)
+    elif isinstance(t, T.ArrayType):
+        v = st.lists(_values(t.elementType), max_size=3)
+    elif isinstance(t, T.MapType):
+        v = st.dictionaries(st.text(max_size=2), _values(t.valueType), max_size=2)
+    else:
+        v = st.tuples(*[_values(f.dataType) for f in t.fields])
+    return st.one_of(st.none(), v)
+
+
+def _schemas_for(t, depth=3):
+    """Subset schemas shaped by the Spark type ``t`` so that most verdicts
+    depend on the values: the type's own JSON type (``integer`` for
+    fractional types) and ``null`` are often allowed, ``properties`` and
+    ``required`` name a struct's fields, ``items`` follows an array's
+    elements."""
+    if depth == 0:
+        return st.just({})
+    natural = (
+        "string" if isinstance(t, (T.StringType, T.TimestampType, T.DateType, T.BinaryType))
+        else "integer" if isinstance(t, (T.LongType, T.IntegerType, T.DoubleType,
+                                         T.FloatType, T.DecimalType))
+        else "boolean" if isinstance(t, T.BooleanType)
+        else "array" if isinstance(t, T.ArrayType)
+        else "object"
+    )
+    keywords = {
+        "type": st.lists(
+            st.sampled_from(_JSON_TYPES + [natural] * 8 + ["null"] * 4),
+            min_size=1, max_size=3,
+        ).map(lambda ts: list(dict.fromkeys(ts))),
+    }
+    optional = {"additionalProperties": st.just(True)}
+    if isinstance(t, T.StructType):
+        keywords["properties"] = st.fixed_dictionaries({
+            f.name: _schemas_for(f.dataType, depth - 1) for f in t.fields
+        })
+        optional["required"] = st.lists(
+            st.sampled_from(t.fieldNames() * 3 + ["x"]), min_size=1, max_size=2, unique=True
+        )
+    if isinstance(t, T.ArrayType):
+        keywords["items"] = _schemas_for(t.elementType, depth - 1)
+    return st.fixed_dictionaries(keywords, optional=optional)
+
+
+@st.composite
+def _case(draw):
+    fields = draw(st.lists(_spark_types(), min_size=1, max_size=3))
+    columns = [draw(st.lists(_values(t), min_size=1, max_size=3)) for t in fields]
+    n = min(len(c) for c in columns)
+    rows = list(zip(*(c[:n] for c in columns)))
+    struct = T.StructType([
+        # a column with no null may be declared non-nullable
+        T.StructField(name, t, any(r[i] is None for r in rows)
+                      or draw(st.sampled_from([True, True, False])))
+        for i, (name, t) in enumerate(zip(_NAMES, fields))
+    ])
+    schema = draw(_schemas_for(struct))
+    if draw(st.sampled_from([True] * 4 + [False])):
+        schema["type"] = "object"  # the row itself is always an object
+    draft = draw(st.sampled_from(_DRAFTS))
+    if draft:
+        schema["$schema"] = draft
+    return struct, rows, schema
+
+
+@given(case=_case())
+@settings(max_examples=9, deadline=None, database=None)
+def test_compiled_schema_matches_jsonschema_and_udf(spark, case):
+    """The compiled verdict agrees row for row with RowValidator on the
+    driver's row dicts and with the jsonschema UDF column."""
+    from pyspark.sql import functions as F
+
+    from syncmaven_spark.validate import _jsonschema_column
+
+    struct, rows, schema = case
+    verdict = compile_row_schema(schema, struct)
+    assert verdict is not None
+    df = spark.createDataFrame(rows, struct).coalesce(1)  # one task
+    compiled = F.lit(verdict) if isinstance(verdict, bool) else verdict
+    got = df.select(
+        compiled.alias("_compiled"), _jsonschema_column(df, schema).alias("_udf"), "*"
+    ).collect()
+    validator = RowValidator(schema)
+    for r in got:
+        row = r.asDict(recursive=True)
+        compiled_ok, udf_ok = row.pop("_compiled"), row.pop("_udf")
+        assert compiled_ok is validator.is_valid(row), (row, schema)
+        assert compiled_ok is udf_ok, (row, schema)
+
+
+_OUTSIDE = [
+    {"format": "email"}, {"pattern": "^a"}, {"enum": [1]}, {"const": 1},
+    {"minimum": 0}, {"maxLength": 2}, {"items": [{}]},
+    {"additionalProperties": False}, {"anyOf": [{}]}, {"$ref": "#"},
+]
+
+
+_STRING_ROW = T.StructType([T.StructField(n, T.StringType()) for n in _NAMES])
+
+
+@st.composite
+def _outside_case(draw):
+    """A subset schema with one keyword from outside the subset planted at
+    the root or in a nested subschema."""
+    schema = draw(_schemas_for(_STRING_ROW))
+    extra = draw(st.sampled_from(_OUTSIDE))
+    node, path = schema, draw(st.lists(st.sampled_from(["items", "a"]), max_size=2))
+    for step in path:
+        if step == "items":
+            node = node.setdefault("items", {})
+        else:
+            node = node.setdefault("properties", {}).setdefault("a", {})
+    if node is schema and "additionalProperties" in extra:
+        node = schema.setdefault("properties", {}).setdefault("a", {})
+    node.update(extra)
+    return schema
+
+
+@given(schema=_outside_case())
+@settings(max_examples=60, deadline=None, database=None)
+def test_keywords_outside_subset_do_not_compile(schema):
+    assert compile_row_schema(schema, _STRING_ROW) is None
+
+
+_MAP_ROW = T.StructType([T.StructField("m", T.MapType(T.StringType(), T.LongType()))])
+
+
+@pytest.mark.parametrize("schema,struct", [
+    ({}, T.StructType([T.StructField("d", T.DayTimeIntervalType())])),
+    ({}, T.StructType([T.StructField("m", T.MapType(T.DateType(), T.LongType()))])),
+    ({}, T.StructType([T.StructField("a", T.LongType()), T.StructField("a", T.StringType())])),
+    ({}, T.StructType([T.StructField("s", T.StructType([
+        T.StructField("x", T.LongType()), T.StructField("x", T.LongType())]))])),
+    ({"properties": {"m": {"required": ["k"]}}}, _MAP_ROW),
+    ({"properties": {"m": {"properties": {"k": {"type": "string"}}}}}, _MAP_ROW),
+], ids=["interval", "date_map_key", "duplicate_columns", "duplicate_struct_fields",
+        "required_under_map", "properties_under_map"])
+def test_types_outside_the_json_image_model_do_not_compile(schema, struct):
+    """is_valid raises on unencodable types, sees collapsed keys for
+    duplicate names, and checks a map's data keys: jsonschema stays the
+    judge."""
+    assert compile_row_schema(schema, struct) is None
+
+
+def test_builtin_stream_schemas_compile_and_stdio_format_does_not(spark):
+    import json
+    import sys
+
+    from syncmaven_spark.sinks import get_destination
+    from syncmaven_spark.sinks.stdio import StdioDestination
+
+    columns = T.StructType([
+        T.StructField(n, t) for n, t in [
+            ("id", T.LongType()), ("external_id", T.StringType()),
+            ("company_id", T.LongType()), ("email", T.StringType()),
+            ("name", T.StringType()), ("company_ids", T.ArrayType(T.LongType())),
+            ("signed_up_at", T.TimestampType()), ("size", T.DoubleType()),
+            ("date", T.DateType()), ("source", T.StringType()),
+            ("campaign_id", T.LongType()), ("cost", T.DecimalType(12, 2)),
+            ("unsubscribed", T.BooleanType()), ("props", T.MapType(T.StringType(), T.StringType())),
+        ]
+    ])
+    names = ["http", "file", "hubspot", "intercom", "mixpanel", "facebook-ads",
+             "twitter-ads", "resend", "google-sheets"]
+    seen = 0
+    for name in names:
+        for spec in get_destination(name, {}).streams():
+            assert compile_row_schema(spec.row_type, columns) is not None, (name, spec.name)
+            seen += 1
+    assert seen == 11
+    # a connector's own rowType with a format constraint stays on jsonschema
+    row_type = {"type": "object", "properties": {"email": {"type": "string", "format": "email"}}}
+    spec = {"type": "stream-spec", "payload": {"streams": [{"name": "raw", "rowType": row_type}]}}
+    connector = [sys.executable, "-c", (
+        "import sys\n"
+        "for line in sys.stdin:\n"
+        f"    print({json.dumps(json.dumps(spec))}, flush=True)\n"
+        "    break\n"
+    )]
+    user = StdioDestination(connector).stream_spec("raw")
+    assert user.row_type == row_type
+    assert compile_row_schema(user.row_type, columns) is None
+
+
+def test_validation_column_rejects_a_model_valid_column(spark):
+    """A model column named _valid was silently overwritten by the tag and
+    then dropped from every row the distributed and streaming paths
+    delivered."""
+    from syncmaven_spark.validate import with_validation_column
+
+    df = spark.createDataFrame([(1, True)], "id long, _valid boolean")
+    with pytest.raises(ValueError, match="_valid"):
+        with_validation_column(df, {"type": "object"})
+    with pytest.raises(ValueError, match="_VALID"):
+        with_validation_column(df.withColumnRenamed("_valid", "_VALID"), None)
+
+
+def test_http_parity_sync_validates_no_source_row(spark, tmp_path, monkeypatch):
+    """The any-object schema accepts every row whatever its values, so
+    run_sync into http never calls RowValidator.is_valid."""
+    from syncmaven_spark.runner import ModelDefinition, SyncDefinition, run_sync
+    from syncmaven_spark.session import load_tables
+    from syncmaven_spark.state import InMemoryStore
+    from tests.conftest import SF_SMOKE
+
+    load_tables(spark, SF_SMOKE)
+    calls = []
+    original = RowValidator.is_valid
+    monkeypatch.setattr(
+        RowValidator, "is_valid", lambda self, row: calls.append(row) or original(self, row)
+    )
+    bodies = []
+    sync = SyncDefinition(
+        id="http_fast",
+        model=ModelDefinition(id="m", query="select * from events order by event_id"),
+        destination="http",
+        stream="default",
+        credentials={
+            "url": "inproc://events", "format": "array", "batchSize": 500,
+            "_transport": lambda method, url, headers, body: bodies.append(body),
+        },
+    )
+    result = run_sync(spark, sync, InMemoryStore())
+    n = spark.table("events").count()
+    assert n > 0 and result.stats.success == n
+    assert calls == []
