@@ -24,9 +24,9 @@ import time
 # Pin the BLAS/OpenMP thread pools to 1 BEFORE numpy loads anywhere in
 # this process (round-9 verdict #3): the knn entries' python stages swung
 # 0.37-2.4× between runs purely from threaded-BLAS contention with the 32
-# Spark worker threads — the kernels already avoid threaded BLAS
-# internally (plain optimize=False einsum), but numpy's pool still spun
-# up for incidental ops. local-mode python workers inherit this env, so
+# Spark worker threads. The pin also covers the kernels' own GEMMs (the
+# PQ code assignment's batched matmul runs in the caller's thread) and
+# numpy's incidental ops. local-mode python workers inherit this env, so
 # the pin covers the pandas-UDF side too. setdefault, not overwrite: an
 # operator experimenting with thread counts can still override.
 for _var in (

@@ -71,11 +71,11 @@ def _normalized_centroids(centroids: np.ndarray) -> np.ndarray:
     return c / (np.linalg.norm(c, axis=1, keepdims=True) + 1e-12)
 
 
-#: bound on the (slab × m × n_codes) float64 scores buffer inside
+#: bound on the (m × slab × n_codes) float64 scores buffer inside
 #: _assign_codes — at the catalog's m=32 × n_codes=256 recipe a 10k-row
-#: un-slabbed pass materialized TWO 655 MB temporaries (the einsum output
-#: plus the ``c² - 2·scores`` subtraction) per call; slabbing + in-place
-#: arithmetic keeps the working set near cache size and was the dominant
+#: un-slabbed pass materialized TWO 655 MB temporaries (the scores plus
+#: the ``c² - 2·scores`` subtraction) per call; slabbing into one reused
+#: buffer keeps the working set near cache size and was the dominant
 #: cost of pq_train's Lloyd loop (measured 25.8 s → see pq_train)
 _ASSIGN_SLAB_BYTES = 32 * 1024 * 1024
 
@@ -85,58 +85,13 @@ def _driver_kernel_threads() -> int:
     while the driver trains, the cluster is idle, so the single-threaded
     discipline the EXECUTOR kernels need (32 python workers × 1 BLAS
     thread — see bench.py's env pin) wastes all but one core here.
-    Row-slab threading is bit-identical (every slab's einsum/argmin is
-    row-independent); 8 threads saturate the memory-bound kernel without
-    fighting the JVM's background threads. Overridable for constrained
-    drivers via SPARK_GRAFT_DRIVER_KERNEL_THREADS."""
+    Row-slab threading is bit-identical (every slab's scores, certificate
+    and argmin are row-independent); the cores this process may run on,
+    capped at 8, saturate the memory-bound kernel without fighting the
+    JVM's background threads."""
     import os
 
-    env = os.environ.get("SPARK_GRAFT_DRIVER_KERNEL_THREADS")
-    if env:
-        try:
-            return max(1, int(env))
-        except ValueError:
-            import warnings
-
-            warnings.warn(
-                f"SPARK_GRAFT_DRIVER_KERNEL_THREADS={env!r} is not an "
-                "integer — ignoring it and using the default thread count."
-            )
-    return max(1, min(8, os.cpu_count() or 1))
-
-
-_GEMM_SCORES_EXACT: bool | None = None
-
-
-def _gemm_scores_exact() -> bool:
-    """One-time self-check (round-11 advice): the sub_dim==2 batched-GEMM
-    formulation is mathematically order-invariant (a two-term dot product
-    under IEEE addition commutativity), but a BLAS kernel is free to use
-    FMA — computing ``fma(x1*c1, x0*c0)`` without rounding the second
-    product — which can differ from the einsum by a ULP and flip a
-    near-tied (not exactly tied) argmin on some BLAS/CPU combinations.
-    Verify RAW-SCORE equality of the two formulations on this
-    interpreter's BLAS once per process; :func:`_assign_codes` falls back
-    to the pinned einsum when they differ, so codes/codebooks stay
-    BLAS-independent."""
-    global _GEMM_SCORES_EXACT
-    if _GEMM_SCORES_EXACT is None:
-        rng = np.random.default_rng(12345)
-        # production-representative shape (the catalog's m=32 × 256-code
-        # recipe at a full slab): BLAS libraries switch dgemm kernels by
-        # problem size, so a tiny probe could pass on a small-matrix
-        # non-FMA path while the blocked kernel used at real shapes
-        # diverges. ~4 MB of doubles, one-time per process.
-        m, n_codes, sub_dim, n = 32, 256, 2, 512
-        books = rng.standard_normal((m, n_codes, sub_dim))
-        xs = rng.standard_normal((n, m, sub_dim))
-        ein = np.einsum("njs,jcs->njc", xs, books, optimize=False)
-        gem = np.matmul(
-            xs.transpose(1, 0, 2),
-            np.ascontiguousarray(books.transpose(0, 2, 1)),
-        ).transpose(1, 0, 2)
-        _GEMM_SCORES_EXACT = bool(np.array_equal(ein, gem))
-    return _GEMM_SCORES_EXACT
+    return max(1, min(8, len(os.sched_getaffinity(0))))
 
 
 def _assign_codes(
@@ -144,77 +99,98 @@ def _assign_codes(
 ) -> np.ndarray:
     """Nearest-codebook-entry assignment per subspace — the ONE encode
     kernel shared by the raw and residual paths AND pq_train's Lloyd
-    iterations: ``argmin ||s-c||² = argmin(-2 s·c + ||c||²)``, all
-    subspaces in one einsum per slab (m separate tiny matmuls pay
-    per-call BLAS thread-spawn overhead — see pq_train).
+    iterations: ``argmin_c ||s-c||² = argmin_c(c² - 2·s·c)``. Its codes
+    are BIT-identical to the pinned reference ``c2 - 2·einsum("njs,jcs->
+    njc", optimize=False)`` on every BLAS, with or without FMA, for every
+    ``sub_dim`` — the formulation every trained codebook, recall floor and
+    checksum stamp is pinned against.
 
-    ``optimize=False`` deliberately: the contraction dim is ``sub_dim``
-    (typically 2-16), far too small for GEMM to win — optimize=True
-    routes through tensordot into the threaded BLAS, whose dispatch on
-    this shape measured 7-36× SLOWER and wildly unstable under host
-    thread contention (round-9: the interleaved benchmark pinned the
-    plain single-threaded einsum at ~0.2 s/call while the BLAS route
-    swung 1.4-7 s/call). The plain C loop is both faster and stable.
+    **Score.** Per row slab, one batched GEMM ``[x | 1] @ [-2·Bᵀ ; c²]``
+    (m matrices of (slab, k+1) × (k+1, n_codes), k = sub_dim) yields
+    every code's score with the affine ``c² - 2·x·c`` step fused in. This
+    is not the ``optimize=True`` route round 9 measured 7-36× slower and
+    unstable: that one went through tensordot into the THREADED BLAS,
+    whose per-call pool dispatch fought the 32 Spark workers. The
+    executors, bench.py and perfbench pin BLAS to one thread, so each of
+    the m GEMMs runs in the caller's thread, and each call does a whole
+    slab × n_codes block of work (measured 3-4× faster than the einsum,
+    whose k-element inner loop defeats SIMD).
+
+    **Certificate.** A BLAS may sum the k+1 terms in any order and may
+    use FMA, so a GEMM score can be a few ULP off the reference and flip
+    a near-tied argmin. Write a = [x | 1], w_c = [-2·b_c | c²_c] and
+    T_c = Σ_t a_t·w_tc, with u = eps/2 and γ_n = n·u/(1 - n·u):
+    - GEMM: any order of a (k+1)-term dot product, with or without FMA,
+      gives |G_c - T_c| ≤ γ_{k+1}·Σ_t |a_t·w_tc|;
+    - reference: ``fl(c² - 2·fl(Σ_s x_s·b_cs))`` (×2 is exact) gives
+      |R_c - T_c| ≤ γ_k·2Σ_s|x_s·b_cs| + u·|c² - 2·dot| ≤ γ_{k+1}·Σ_t
+      |a_t·w_tc|;
+    - so |G_c - R_c| ≤ δ = 2γ_{k+1}·S with S = Σ_t |a_t|·max_c |w_tc|,
+      the same S for every code of the row and subspace; 2γ_{k+1} ≈
+      (k+1)·eps, and the kernel uses (2k+6)·eps, which also absorbs the
+      rounding of S and of the margin itself, plus ``tiny`` for
+      subnormal products.
+    When GEMM's runner-up trails its best code by more than 2δ, every
+    other code's reference score exceeds the best's, so the reference
+    picks the same code. Exact ties fall under the margin (einsum's
+    first-index tie-break is kept that way), a NaN or inf margin or bound
+    compares false, and a row with ANY uncertified cell is recomputed by
+    the reference einsum itself. On random data no cell falls back.
 
     The row axis SLABS under :data:`_ASSIGN_SLAB_BYTES` with one reused
-    buffer and in-place ``b = -2b + c²`` (bit-identical to
-    ``c² - 2·scores``: ×2 and sign flip are exact, IEEE addition is
-    commutative — codebooks and stamps are unchanged): the un-slabbed
-    form allocated two scores-sized temporaries per call, which at the
-    m=32 × n_codes=256 recipe made memory traffic, not FLOPs, the
-    Lloyd loop's cost (round-10: pq_train 25.8 s → 8.3 s measured at
-    sf0.1, bit-identical output)."""
+    scores buffer: the un-slabbed form allocated scores-sized temporaries
+    per call, which at the m=32 × n_codes=256 recipe made memory traffic,
+    not FLOPs, the Lloyd loop's cost (round-10: pq_train 25.8 s → 8.3 s
+    at sf0.1, bit-identical output)."""
     m, n_codes, sub_dim = books.shape
     n = len(Xn)
     Xs = np.ascontiguousarray(Xn.reshape(n, m, sub_dim))
     c2 = (books * books).sum(axis=2)
+    # rows [x | 1] of shape (m, slab, k+1) against (m, k+1, n_codes)
+    W = np.concatenate([-2.0 * books.transpose(0, 2, 1), c2[:, None, :]], 1)
+    # 2δ per unit |a_t|, so that 2δ = |a| @ bound2 (+ the subnormal floor)
+    bound2 = (
+        2 * (2 * sub_dim + 6) * np.finfo(np.float64).eps
+        * np.abs(W).max(axis=2, keepdims=True)
+    )
+    tiny = np.finfo(np.float64).tiny
     slab = max(1, _ASSIGN_SLAB_BYTES // (m * n_codes * 8))
     out = np.empty((n, m), dtype=np.int64)
-    # sub_dim == 2 (the dim-64 m=32 catalog recipe) takes a BATCHED-GEMM
-    # formulation — (m, slab, 2) @ (m, 2, n_codes) — which measured 3.7×
-    # faster than the einsum at these shapes (the einsum's 2-element
-    # inner loop defeats SIMD; round-11). A two-term dot product is
-    # order-invariant under IEEE addition commutativity, but that
-    # guarantee is BLAS-kernel-dependent: an FMA-using kernel skips one
-    # intermediate rounding and can be a ULP off the einsum, so the GEMM
-    # path additionally requires the one-time raw-score self-check
-    # (_gemm_scores_exact) to pass on this interpreter's BLAS — verified
-    # element-exact in tests on the supported stack. Larger sub_dims
-    # keep the einsum, whose s-ascending accumulation order is pinned —
-    # a GEMM's k-accumulation order is library-internal and a ULP
-    # difference could flip a near-tied argmin, i.e. the codebooks.
-    gemm = sub_dim == 2 and _gemm_scores_exact()
-    Bt = np.ascontiguousarray(books.transpose(0, 2, 1)) if gemm else None
 
-    def run_range(i0: int, i1: int, buf: np.ndarray) -> None:
+    def run_range(i0: int, i1: int) -> None:
+        rows = min(slab, i1 - i0)
+        xa = np.ones((m, rows, sub_dim + 1))
+        buf = np.empty((m, rows, n_codes))
         for i in range(i0, i1, slab):
             xs = Xs[i : i + slab]
-            if gemm:
-                g = buf[:, : len(xs)]
-                np.matmul(xs.transpose(1, 0, 2), Bt, out=g)
-                g *= -2.0
-                g += c2[:, None, :]
-                out[i : i + slab] = g.argmin(axis=2).T
-            else:
-                b = buf[: len(xs)]
-                np.einsum("njs,jcs->njc", xs, books, out=b, optimize=False)
-                b *= -2.0
-                b += c2[None, :, :]
-                out[i : i + slab] = b.argmin(axis=2)
-
-    def make_buf(rows: int) -> np.ndarray:
-        shape = (m, rows, n_codes) if gemm else (rows, m, n_codes)
-        return np.empty(shape)
+            a, g = xa[:, : len(xs)], buf[:, : len(xs)]
+            a[:, :, :sub_dim] = xs.transpose(1, 0, 2)
+            np.matmul(a, W, out=g)
+            best = g.argmin(axis=2)[..., None]
+            g1 = np.take_along_axis(g, best, axis=2)
+            np.put_along_axis(g, best, np.inf, axis=2)
+            g2 = np.take_along_axis(g, g.argmin(axis=2)[..., None], axis=2)
+            sure = g2 - g1 > np.matmul(np.abs(a), bound2) + tiny
+            codes = best[..., 0].T
+            redo = np.flatnonzero(~sure.all(axis=0)[:, 0])
+            if redo.size:
+                ref = np.einsum(
+                    "njs,jcs->njc", xs[redo], books, optimize=False
+                )
+                ref *= -2.0
+                ref += c2[None, :, :]
+                codes[redo] = ref.argmin(axis=2)
+            out[i : i + slab] = codes
 
     threads = max(1, min(threads, (n + slab - 1) // slab))
     if threads == 1:
-        run_range(0, n, make_buf(min(slab, n)))
+        run_range(0, n)
         return out
     # DRIVER-side parallel path (see _driver_kernel_threads): contiguous
-    # slab-aligned row ranges, one private buffer per thread — every
+    # slab-aligned row ranges, private buffers per thread — every
     # row's scores/argmin are computed by exactly the same arithmetic as
     # the sequential loop, so the output is bit-identical regardless of
-    # the thread split (the einsum/argmin C loops release the GIL, which
+    # the thread split (the matmul/argmin C loops release the GIL, which
     # is what makes the threads actually run concurrently)
     from concurrent.futures import ThreadPoolExecutor
 
@@ -226,10 +202,7 @@ def _assign_codes(
         if t * per * slab < n
     ]
     with ThreadPoolExecutor(max_workers=len(ranges)) as pool:
-        futs = [
-            pool.submit(run_range, i0, i1, make_buf(min(slab, i1 - i0)))
-            for i0, i1 in ranges
-        ]
+        futs = [pool.submit(run_range, i0, i1) for i0, i1 in ranges]
         for f in futs:
             f.result()
     return out
@@ -348,20 +321,19 @@ def pq_train(
         books[j] = init
     # joint Lloyd over ALL subspaces per iteration (each converges
     # independently — the math is identical to m separate loops), with
-    # the assignment step delegated to the ONE slabbed in-place kernel
-    # the encode path uses (_assign_codes): m separate tiny matmuls paid
-    # ~9 ms EACH in BLAS thread-spawn overhead (round-8), and the
-    # un-slabbed joint einsum then made MEMORY traffic the cost — two
-    # 655 MB temporaries per iteration at m=32 × n_codes=256 × 10k
-    # samples, 25.8 s of the knn_pq_probe entry; the shared slabbed
-    # kernel cut the same bit-identical training to 8.3 s (round-10).
+    # the assignment step delegated to the ONE slabbed kernel the encode
+    # path uses (_assign_codes): m separate tiny matmuls per iteration
+    # paid ~9 ms EACH in BLAS thread-spawn overhead (round-8), and an
+    # un-slabbed joint einsum made MEMORY traffic the cost — two 655 MB
+    # temporaries per iteration at m=32 × n_codes=256 × 10k samples
+    # (round-10: 25.8 s → 8.3 s of the knn_pq_probe entry, bit-identical).
     Xs = np.ascontiguousarray(Xn.reshape(len(Xn), m, sub_dim))
     offsets = (np.arange(m) * n_codes)[None, :]
     # DRIVER-side assignment threads across row slabs (bit-identical —
     # see _assign_codes): the cluster is idle during training, so the
     # executor kernels' single-thread discipline would leave the Lloyd
-    # loop memory-bound on one core (round-11: the m=32 × 256 recipe's
-    # 10-iteration loop dropped ~4× at sf0.1)
+    # loop on one core (round-11: the m=32 × 256 recipe's 10-iteration
+    # loop dropped ~4× at sf0.1)
     lloyd_threads = _driver_kernel_threads()
     for _ in range(iterations):
         assign = _assign_codes(Xn, books, threads=lloyd_threads)  # (n, m)

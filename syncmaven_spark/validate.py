@@ -111,8 +111,7 @@ class RowValidator:
         # — so undeclared columns pass through as custom attributes even
         # when a zod-derived schema declared additionalProperties: false.
         self.schema["additionalProperties"] = True
-        cls = jsonschema.validators.validator_for(self.schema)
-        cls.check_schema(self.schema)
+        cls = _checked_draft(json.dumps(self.schema))
         # format constraints enforced like the reference's Ajv+addFormats
         # (uniparser.ts:49-51); jsonschema checks each format when its
         # backing package is importable (rfc3339-validator ships here)

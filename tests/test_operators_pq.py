@@ -21,11 +21,7 @@ from syncmaven_spark.operators import (
     rerank_exact_topk,
 )
 from syncmaven_spark.operators.dedup import stamped_recipe
-from syncmaven_spark.operators.pq import (
-    _assign_codes,
-    _driver_kernel_threads,
-    _gemm_scores_exact,
-)
+from syncmaven_spark.operators.pq import _assign_codes
 from syncmaven_spark.operators.similarity import (
     _load_codebook,
     ivf_append,
@@ -941,15 +937,6 @@ def test_bounded_artifact_tables_roundtrip_and_are_single_partition(_assigned):
     assert pq_recipe["m"] == 8 and pq_recipe["n_codes"] == 16
 
 
-def test_driver_kernel_threads_malformed_env(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_KERNEL_THREADS", "eight")
-    with pytest.warns(UserWarning, match="SPARK_GRAFT_DRIVER_KERNEL_THREADS"):
-        n = _driver_kernel_threads()
-    assert n >= 1
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_KERNEL_THREADS", "3")
-    assert _driver_kernel_threads() == 3
-
-
 @pytest.mark.parametrize("residual", [False, True])
 def test_pq_drift_assigned_matches_pq_drift(_assigned, residual):
     """pq_drift_assigned over ivf_append's assignment rows equals pq_drift
@@ -1039,21 +1026,24 @@ def _reference_assign(X: np.ndarray, books: np.ndarray) -> np.ndarray:
     [
         (2048, 32, 256, 2, None),  # the catalog's m=32 recipe
         (1, 32, 256, 2, None),
-        (777, 8, 64, 8, None),  # sub_dim != 2: always the einsum
+        (777, 8, 64, 8, None),
         (5, 4, 16, 16, None),
         (997, 32, 16, 2, "slabs"),
         (64, 4, 8, 2, "ties"),
-        (300, 8, 32, 2, "selfcheck-false"),
+        *[(512, 8, 32, k, "near-ties") for k in (2, 4, 8, 16)],
+        *[(512, 8, 32, k, "fma") for k in (2, 4, 8, 16)],
     ],
     ids=["m32", "one-row", "sub-dim-8", "sub-dim-16", "slab-boundaries",
-         "exact-ties", "selfcheck-false"],
+         "exact-ties",
+         *[f"near-ties-sub-dim-{k}" for k in (2, 4, 8, 16)],
+         *[f"fma-emulated-sub-dim-{k}" for k in (2, 4, 8, 16)]],
 )
 def test_assign_codes_matches_reference_bitwise(
     monkeypatch, n, m, n_codes, sub_dim, case, threads
 ):
-    """_assign_codes — slabbed, thread-split, and on the sub_dim == 2 GEMM
-    path when the self-check allows it — is BIT-identical to the
-    reference, so codebooks do not depend on the host's BLAS."""
+    """_assign_codes — slabbed, thread-split, its GEMM argmin certified or
+    recomputed — is BIT-identical to the reference for every sub_dim, so
+    codebooks do not depend on the host's BLAS."""
     rng = np.random.RandomState(11)
     X = rng.standard_normal((n, m * sub_dim))
     books = rng.standard_normal((m, n_codes, sub_dim))
@@ -1066,27 +1056,31 @@ def test_assign_codes_matches_reference_bitwise(
         books = np.concatenate(
             [books[:, :3], books[:, :3], books[:, :2]], axis=1
         )
-    elif case == "selfcheck-false":
-        monkeypatch.setattr(pq_mod, "_GEMM_SCORES_EXACT", False)
-    assert np.array_equal(
-        _reference_assign(X, books), _assign_codes(X, books, threads=threads)
-    )
+    elif case in ("near-ties", "fma"):
+        # every sub-vector sits just off the midpoint of two codes, so
+        # their scores differ by about the noise: 1e-13 straddles the
+        # certificate's margin, 1e-15 is a few ULP of the scores
+        noise = 1e-13 if case == "near-ties" else 1e-15
+        pick = rng.randint(n_codes, size=(n, m, 2))
+        j = np.arange(m)
+        mid = (books[j, pick[..., 0]] + books[j, pick[..., 1]]) / 2
+        X = (mid + noise * rng.standard_normal(mid.shape)).reshape(n, -1)
+    expected = _reference_assign(X, books)
+    if case == "fma":
+        # emulate a BLAS that rounds differently (FMA, another summation
+        # order): every GEMM result one ULP off, odd codes up, even down
+        def one_ulp_off(r):
+            up = np.arange(r.shape[-1]) % 2 == 1
+            return np.nextafter(r, np.where(up, np.inf, -np.inf), out=r)
 
-
-def test_gemm_selfcheck_agrees_with_raw_scores():
-    """Argmin equality alone can hide a ULP-level FMA difference. Raw-score
-    equality of the GEMM and einsum formulations is a property of the
-    host's BLAS (an FMA-using dgemm skips one intermediate rounding), so
-    this asserts that the one-time self-check AGREES with a direct
-    raw-score comparison at a production shape: the GEMM path is enabled
-    exactly when it is bit-safe on this stack."""
-    rng = np.random.default_rng(7)
-    m, n_codes, sub_dim, n = 32, 256, 2, 512
-    books = rng.standard_normal((m, n_codes, sub_dim))
-    xs = rng.standard_normal((n, m, sub_dim))
-    ein = np.einsum("njs,jcs->njc", xs, books, optimize=False)
-    gem = np.matmul(
-        xs.transpose(1, 0, 2),
-        np.ascontiguousarray(books.transpose(0, 2, 1)),
-    ).transpose(1, 0, 2)
-    assert _gemm_scores_exact() is bool(np.array_equal(ein, gem))
+        # the nudge flips the plain argmin of the reference scores ...
+        scores = (books * books).sum(axis=2) - 2.0 * np.einsum(
+            "njs,jcs->njc", X.reshape(n, m, sub_dim), books, optimize=False
+        )
+        assert (one_ulp_off(scores).argmin(axis=2) != expected).any()
+        # ... but not the certified kernel's codes
+        matmul = np.matmul
+        monkeypatch.setattr(
+            np, "matmul", lambda *a, **kw: one_ulp_off(matmul(*a, **kw))
+        )
+    assert np.array_equal(expected, _assign_codes(X, books, threads=threads))

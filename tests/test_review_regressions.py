@@ -14,13 +14,11 @@ from syncmaven_spark.cursor import (
     deserialize_cursor,
     serialize_cursor,
 )
-from syncmaven_spark.operators import cosine_topk_bruteforce, cosine_topk_ivf
 from syncmaven_spark.operators.graph import dedup_cluster_assignments
 from syncmaven_spark.operators.multimodal import (
     extract_features,
     sample_video_frames,
 )
-from syncmaven_spark.operators.similarity import train_centroids
 from syncmaven_spark.oracle import compare
 from syncmaven_spark.project import read_project
 from syncmaven_spark.queries import CATALOG
@@ -328,46 +326,6 @@ def test_audio_features_short_clip_has_no_nan():
         samples, rate = decode_wav(buf.getvalue())
         feats = _audio_features(samples, rate, 16)
         assert np.isfinite(feats).all(), f"NaN/inf at n_frames={n_frames}"
-
-
-def test_cosine_topk_disjoint_id_space_opt_out(spark):
-    """The implicit q_id != n_id self-exclusion
-    silently dropped a corpus row whose id collides with a query id from a
-    SEPARATE table; exclude_self=False must retrieve it."""
-    corpus = spark.createDataFrame(
-        [(5, [1.0, 0.0]), (6, [0.0, 1.0])], "vec_id long, embedding array<double>"
-    )
-    queries = spark.createDataFrame(
-        [(5, [1.0, 0.0])], "vec_id long, embedding array<double>"
-    )
-    top_default = cosine_topk_bruteforce(corpus, queries, k=1).collect()
-    assert [r["n_id"] for r in top_default] == [6]  # documented default
-    top = cosine_topk_bruteforce(corpus, queries, k=1, exclude_self=False).collect()
-    assert [r["n_id"] for r in top] == [5]
-
-    cents = np.array([[1.0, 0.0], [0.0, 1.0]])
-    ivf = cosine_topk_ivf(
-        corpus, queries, k=1, centroids=cents, n_probe=2, exclude_self=False
-    ).collect()
-    assert [r["n_id"] for r in ivf] == [5]
-
-
-def test_train_centroids_sample_is_spread_not_prefix(spark):
-    """The order_col 'reproducible sample' took an
-    ordered PREFIX — on a corpus whose ids correlate with embedding
-    structure the 2-centroid fit collapsed onto the head cluster. The
-    hash-ordered sample must cover both clusters."""
-    rows = [(i, [10.0, 0.0]) for i in range(100)] + [
-        (100 + i, [0.0, 10.0]) for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = train_centroids(
-        df, n_centroids=2, sample_size=50, order_col="vec_id"
-    )
-    # each cluster axis must own one centroid; a prefix sample puts both
-    # centroids on the x-axis cluster
-    axis = {int(np.argmax(np.abs(c))) for c in cents}
-    assert axis == {0, 1}, cents
 
 
 def test_cc_loop_confs_isolated_from_caller_session(spark, tmp_path):
@@ -767,32 +725,6 @@ def test_simhash_bucket_cap_bounds_degenerate_buckets(spark):
         df, "text", "doc_id", max_hamming=3, max_bucket_size=None
     ).collect()
     assert len(full) == n * (n - 1) // 2
-
-
-def test_nan_embeddings_never_rank_or_pair(spark):
-    """A NaN element made cos_sim NaN, which Spark
-    orders above every double and passes >= threshold — NaN vectors ranked
-    #1 for every query (evicting true neighbors) and emitted false LSH
-    pairs while the exact kernel excluded them. Non-finite vectors are now
-    filtered like nulls at every entry point."""
-    from syncmaven_spark.operators.similarity import (
-        cosine_pairs_exact,
-        cosine_pairs_lsh,
-        cosine_topk_bruteforce,
-    )
-
-    nan, inf = float("nan"), float("inf")
-    corpus = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0]), (2, [0.9, 0.1, 0.0]),
-         (3, [nan, 1.0, 0.0]), (4, [inf, 2.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    top = cosine_topk_bruteforce(corpus, corpus.filter("vec_id = 1"), k=2).collect()
-    assert [r["n_id"] for r in top] == [2], top  # only the finite neighbor
-    lsh = cosine_pairs_lsh(corpus, threshold=0.9, n_planes=2, n_tables=4).collect()
-    exact = cosine_pairs_exact(corpus, threshold=0.9).collect()
-    assert {(r["id_a"], r["id_b"]) for r in exact} == {(1, 2)}
-    assert {(r["id_a"], r["id_b"]) for r in lsh} <= {(1, 2)}  # never a NaN pair
 
 
 def test_exact_pairs_null_id_does_not_crash(spark):

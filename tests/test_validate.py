@@ -108,6 +108,30 @@ def test_additional_properties_forced_true():
     assert v2.is_valid({"id": 1, "x": 2})
 
 
+def test_schema_meta_check_runs_once_per_schema(monkeypatch):
+    """The meta-schema check is memoised per schema (it costs milliseconds
+    and a validator is built per sync), and an invalid schema still
+    raises SchemaError on every construction."""
+    import jsonschema
+
+    cls = jsonschema.Draft202012Validator
+    check = cls.check_schema
+    calls = []
+
+    def counting(schema, *a, **kw):
+        calls.append(schema)
+        return check(schema, *a, **kw)
+
+    monkeypatch.setattr(cls, "check_schema", counting)
+    schema = {"type": "object", "title": "meta-check-once"}
+    RowValidator(schema)
+    RowValidator(schema)
+    assert len(calls) == 1
+    for _ in range(2):
+        with pytest.raises(jsonschema.SchemaError):
+            RowValidator({"type": "no-such-type"})
+
+
 def test_format_constraints_enforced():
     """Ajv+addFormats parity: format keywords reject bad values."""
     v = RowValidator({
